@@ -63,26 +63,16 @@ def _ordered(merged: dict) -> dict:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from dqe_spark import queries_parity
+    from dqe_spark import queries_dql, queries_ext, queries_parity
 
-    merged = dict(queries_parity.QUERIES)
-    for mod in ("queries_ext", "queries_dql"):
-        try:
-            m = __import__(f"dqe_spark.{mod}", fromlist=["QUERIES"])
-            merged.update(m.QUERIES)
-        except ImportError:
-            pass
-    return _ordered(merged)
+    return _ordered(
+        {**queries_parity.QUERIES, **queries_ext.QUERIES, **queries_dql.QUERIES}
+    )
 
 
 def all_oracles() -> dict[str, str]:
-    from dqe_spark import queries_parity
+    from dqe_spark import queries_dql, queries_ext, queries_parity
 
-    merged = dict(queries_parity.ORACLES)
-    for mod in ("queries_ext", "queries_dql"):
-        try:
-            m = __import__(f"dqe_spark.{mod}", fromlist=["ORACLES"])
-            merged.update(m.ORACLES)
-        except ImportError:
-            pass
-    return merged
+    return {
+        **queries_parity.ORACLES, **queries_ext.ORACLES, **queries_dql.ORACLES
+    }

@@ -623,27 +623,6 @@ def neardup_srp_pairs(
     return _verify_from_keyed(keyed, cand, threshold, vec, id_col)
 
 
-def _verify_pairs(
-    df: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact-cosine verification of candidate (id_i, id_j) pairs.
-
-    Squared norms are computed ONCE per vector map-side and joined in
-    with it, so each candidate costs a single dot-product fold instead
-    of three (the norms otherwise re-fold per PAIR — measured 3-4× of
-    the verification wall at sf0.1). The value flow is unchanged —
-    dot/(√nn_a·√nn_b) over the same doubles — so verified cosines stay
-    bit-identical to the one-expression cosine() and to the oracles."""
-    withn = df.select(
-        F.col(id_col), F.col(vec), dot(F.col(vec), F.col(vec)).alias("__nn")
-    )
-    return _verify_withn(withn, cand, threshold, vec, id_col)
-
-
 def _verify_bcast_max_bytes() -> int:
     """Build-side budget for the FUSED verify (guide §3.1/§4.1): the
     (id, vec, nn) relation is collected and broadcast to the Python
@@ -748,10 +727,10 @@ def _verify_from_keyed(
     vec: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """_verify_pairs over a _keyed_frame: the vectors and squared
-    norms are already materialized there, so verification reads the
-    checkpointed frame instead of re-scanning (and re-folding) the
-    source table. Identical arithmetic — same doubles, same rounded
+    """Exact-cosine verification of candidate (id_i, id_j) pairs over
+    a _keyed_frame: the vectors and squared norms are already
+    materialized there, so verification reads the checkpointed frame
+    instead of re-scanning (and re-folding) the source table. Identical arithmetic — same doubles, same rounded
     cosines.
 
     Two physical forms, chosen by build-side size (one cheap combined

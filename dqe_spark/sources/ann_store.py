@@ -33,14 +33,18 @@ alternative (separate vector store + join) pays a shuffle per query.
 from __future__ import annotations
 
 import json
-import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    overwrite_partitions,
+    publish,
+    session_load_memo,
+)
 
 
 def _ann_dir(sf_dir: str) -> Path:
@@ -79,9 +83,6 @@ def ingest_ann(
     bytes ≈ probes × target_cell × row_size, independent of n. At
     registry scales auto_clusters lands on the historical 8, so
     nothing moves at the gate."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     from dqe_spark.operators import similarity as S
 
     out = _ann_dir(sf_dir)
@@ -126,16 +127,7 @@ def ingest_ann(
             }
         )
     )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if ann_path(sf_dir) is None:
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out, done="index/_SUCCESS")
 
 
 def merge_ann_increment(
@@ -153,9 +145,6 @@ def merge_ann_increment(
     first so the write doesn't read from the path it overwrites. This
     mirrors rollup.merge_rollup_increment — at 100 TB a nightly vector
     backfill costs proportional to the new data, not the index."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     from dqe_spark.operators import similarity as S
 
     ingest_ann(spark, sf_dir)
@@ -186,22 +175,11 @@ def merge_ann_increment(
         existing.unionByName(inc.select(*existing.columns))
         .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("cell")
-        .sortWithinPartitions("cell", id_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(str(p / "index"))
+    # vacate: an upsert that MOVES a cell's only occupant elsewhere
+    # must still clear the old cell dir or its stale row keeps serving
+    overwrite_partitions(
+        merged, p / "index", ("cell",), ("cell", id_col), vacate=touched
     )
-    # dynamic overwrite skips partitions with no output rows: an upsert
-    # that MOVES a cell's only occupant elsewhere must still clear the
-    # old cell dir or its stale row keeps being served (same hole as
-    # minhash_store.merge_minhash_increment)
-    present = {r["cell"] for r in merged.select("cell").distinct().collect()}
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
     spark.catalog.refreshByPath(str(p / "index"))
     return p
 
@@ -210,11 +188,10 @@ def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
     """(index DataFrame, meta) if the index is built, else None.
     Memoized per session: re-listing the index files + re-reading the
     centroid/codebook meta per serve was most of a warm serve's wall
-    (see store.session_load_memo); every writer below invalidates."""
+    (see store.session_load_memo); every store write drops the memo."""
     p = ann_path(sf_dir)
     if p is None:
         return None
-    from dqe_spark.sources.store import session_load_memo
 
     def _load():
         meta = json.loads((p / "meta.json").read_text())
@@ -325,9 +302,6 @@ def purge_vector_ids(
     centroids/codebooks are untouched (they are trained artifacts, not
     per-vector state). A purged vector can no longer be served by any
     probe."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     p = ann_path(sf_dir)
     if p is None:
         raise FileNotFoundError(f"no ANN index under {_ann_dir(sf_dir)}")
@@ -347,21 +321,11 @@ def purge_vector_ids(
         .join(ids_b, id_col, "left_anti")
         .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("cell")
-        .sortWithinPartitions("cell", id_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(str(p / "index"))
+    # vacate: purging a cell's entire population yields no output
+    # partition, and the purged rows must not keep serving
+    overwrite_partitions(
+        kept, p / "index", ("cell",), ("cell", id_col), vacate=touched
     )
-    # purging a cell's entire population yields no output partition —
-    # dynamic overwrite would skip it and keep serving the purged rows;
-    # clear such cells explicitly (same hole as minhash_store)
-    present = {r["cell"] for r in kept.select("cell").distinct().collect()}
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
     # rewritten files replace the session's cached listing for the path
     spark.catalog.refreshByPath(str(p / "index"))
     return p

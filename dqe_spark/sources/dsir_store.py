@@ -30,16 +30,13 @@ the repo's own ladder conventions.
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import (
-    STORE_ROOT,
-    invalidate_load_memo,
-    session_load_memo,
-)
+from dqe_spark.sources.store import STORE_ROOT, publish, session_load_memo
 
 #: default gram-bucket count — matches the registry oracle's B.
 #:
@@ -96,9 +93,6 @@ def build_dsir_model(
     atomic tmp+rename): one gram pass, ≤B output rows, coalesced to a
     single file — the model is KBs at any corpus size. ``docs``
     overrides the corpus source (backfill-then-stream splits, tests)."""
-    import os
-    import shutil
-
     from dqe_spark.operators.text import (
         dsir_bucket_counts,
         dsir_model_counts,
@@ -107,7 +101,6 @@ def build_dsir_model(
     out = _dsir_dir(sf_dir, target_lang)
     if not force and (out / "_SUCCESS").exists():
         return out
-    invalidate_load_memo()
     if docs is None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     model = dsir_model_counts(
@@ -122,16 +115,7 @@ def build_dsir_model(
         "overwrite"
     ).parquet(str(tmp))
     (tmp / "_B").write_text(str(n_buckets))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def write_dsir_stream_part(
@@ -144,22 +128,14 @@ def write_dsir_stream_part(
     snapshot — called by streaming/ingest.stream_dsir_model's
     foreachBatch with the full complete-mode aggregate, so a replayed
     trigger rewrites the same rows instead of double-counting."""
-    import shutil
-
     out = _stream_dir(sf_dir, target_lang)
-    invalidate_load_memo()
     tmp = out.parent / f"_tmp_{out.name}"
     if tmp.exists():
         shutil.rmtree(tmp)
     model_df.coalesce(1).sortWithinPartitions("bucket").write.mode(
         "overwrite"
     ).parquet(str(tmp))
-    if out.exists():
-        shutil.rmtree(out)
-    import os
-
-    os.rename(tmp, out)
-    return out
+    return publish(tmp, out)
 
 
 def load_dsir_model(
@@ -206,9 +182,6 @@ def merge_dsir_increment(
     as build_dsir_model (every store write in the repo is an atomic
     rename; a crash mid-write leaves the previous model intact, never
     a marker-less or half-written live dir)."""
-    import os
-    import shutil
-
     from dqe_spark.operators.text import (
         dsir_bucket_counts,
         dsir_model_counts,
@@ -218,7 +191,6 @@ def merge_dsir_increment(
     if not (out / "_SUCCESS").exists():
         build_dsir_model(spark, sf_dir, target_lang)
         return out
-    invalidate_load_memo()
     b = dsir_b(sf_dir, target_lang)
     inc = dsir_model_counts(
         dsir_bucket_counts(new_docs, F.col("lang") == target_lang, b)
@@ -242,6 +214,4 @@ def merge_dsir_increment(
         "overwrite"
     ).parquet(str(tmp))
     (tmp / "_B").write_text(str(b))
-    shutil.rmtree(out)
-    os.rename(tmp, out)
-    return out
+    return publish(tmp, out)

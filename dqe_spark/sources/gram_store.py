@@ -44,7 +44,12 @@ from pyspark.sql import functions as F
 
 from dqe_spark.operators.dedup import merge_position_islands, positional_grams
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    auto_buckets,
+    overwrite_partitions,
+    publish,
+)
 
 K_GRAM = 5
 #: floor of the auto-sized layout (also the legacy fixed count — a
@@ -138,18 +143,7 @@ def build_gram_store(
             "gb", F.pmod(F.crc32(F.col("gram")), F.lit(n_buckets)).cast("int")
         )
     _write_layout(grams, tmp, n_buckets)
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
-
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def rebucket_gram_store(
@@ -184,11 +178,7 @@ def rebucket_gram_store(
     if tmp.exists():
         shutil.rmtree(tmp)
     _write_layout(rekeyed, tmp, n_buckets)
-    shutil.rmtree(p)
-    import os
-
-    os.rename(tmp, p)
-    return p
+    return publish(tmp, p)
 
 
 def merge_gram_increment(
@@ -246,22 +236,9 @@ def merge_gram_increment(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("gb")
-        .sortWithinPartitions("gram", "doc_id", "p")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb")
-        .parquet(str(p))
+    return overwrite_partitions(
+        merged, p, ("gb",), ("gram", "doc_id", "p"), vacate=touched_gb
     )
-    # dynamic overwrite cannot vacate a bucket whose merged frame is
-    # empty — delete those explicitly (same hole the minhash store
-    # closes; merged is checkpointed so nothing re-reads stale files)
-    present = {r["gb"] for r in merged.select("gb").distinct().collect()}
-    for b in touched_gb:
-        if b not in present:
-            shutil.rmtree(p / f"gb={b}", ignore_errors=True)
-    return p
 
 
 def spans_against_store(
@@ -311,19 +288,9 @@ def _drop_rows_where(spark: SparkSession, p: Path, gone) -> Path:
         .where(~gone)
         .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("gb")
-        .sortWithinPartitions("gram", "doc_id", "p")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb")
-        .parquet(str(p))
+    return overwrite_partitions(
+        kept, p, ("gb",), ("gram", "doc_id", "p"), vacate=touched
     )
-    present = {r["gb"] for r in kept.select("gb").distinct().collect()}
-    for b in touched:
-        if b not in present:
-            shutil.rmtree(p / f"gb={b}", ignore_errors=True)
-    return p
 
 
 def purge_doc_ids(

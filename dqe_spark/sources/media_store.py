@@ -27,7 +27,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import STORE_ROOT, publish
 
 
 def _store_dir(sf_dir: str, variant: str = "baseline") -> Path:
@@ -133,17 +133,7 @@ def build_media_store(
         .write.mode("overwrite")
         .parquet(str(tmp))
     )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
-
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
+    publish(tmp, out)
     (out / "_FIXTURE").write_text(ver)
     return out
 

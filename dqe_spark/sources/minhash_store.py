@@ -48,7 +48,12 @@ from dqe_spark.operators.dedup import (
     shingle_sets,
 )
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    auto_buckets,
+    overwrite_partitions,
+    publish,
+)
 
 #: floor of the auto-sized layout (also the legacy fixed count — a
 #: pre-marker store on disk reads back as 64).
@@ -145,18 +150,7 @@ def build_minhash_store(
         shutil.rmtree(tmp)
     _write_layout(_bands_of(sets, n_buckets=n_buckets), tmp, n_buckets)
     sets.write.mode("overwrite").parquet(str(tmp / "_shingles"))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
-
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def rebucket_minhash_store(
@@ -192,11 +186,7 @@ def rebucket_minhash_store(
     _write_layout(rekeyed, tmp, n_buckets)
     # carry the sidecar over (it is bucket-agnostic)
     shutil.copytree(p / "_shingles", tmp / "_shingles")
-    shutil.rmtree(p)
-    import os
-
-    os.rename(tmp, p)
-    return p
+    return publish(tmp, p)
 
 
 def merge_minhash_increment(
@@ -258,24 +248,13 @@ def merge_minhash_increment(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("bb")
-        .sortWithinPartitions("key", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bb")
-        .parquet(str(p))
-    )
-    # Dynamic partition overwrite only rewrites partitions PRESENT in
-    # the output: a touched bucket whose merged frame has zero rows
-    # (the re-landed doc was its only occupant and the new text hashes
+    # vacate: a touched bucket whose merged frame has zero rows (the
+    # re-landed doc was its only occupant and the new text hashes
     # elsewhere) would otherwise keep its stale band keys on disk —
-    # breaking the equals-rebuild contract. Delete those explicitly
-    # (merged is checkpointed, so nothing re-reads the stale files).
-    present = {r["bb"] for r in merged.select("bb").distinct().collect()}
-    for b in touched_bb:
-        if b not in present:
-            shutil.rmtree(p / f"bb={b}", ignore_errors=True)
+    # breaking the equals-rebuild contract
+    overwrite_partitions(
+        merged, p, ("bb",), ("key", "doc_id"), vacate=touched_bb
+    )
     sh_path = p / "_shingles"
     sh = (
         spark.read.parquet(str(sh_path))
@@ -368,22 +347,9 @@ def purge_doc_ids(
         .select("doc_id", "band", "key", "bb")
         .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("bb")
-        .sortWithinPartitions("key", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bb")
-        .parquet(str(p))
-    )
-    # same empty-touched-bucket hole as merge_minhash_increment: a
-    # bucket fully occupied by purged docs yields no output partition,
-    # so dynamic overwrite never rewrites it — delete it explicitly or
-    # the purged doc could still surface as a candidate
-    present = {r["bb"] for r in kept.select("bb").distinct().collect()}
-    for b in touched_bb:
-        if b not in present:
-            shutil.rmtree(p / f"bb={b}", ignore_errors=True)
+    # vacate: a bucket fully occupied by purged docs yields no output
+    # partition, and the purged doc must not surface as a candidate
+    overwrite_partitions(kept, p, ("bb",), ("key", "doc_id"), vacate=touched_bb)
     sh_path = p / "_shingles"
     sh = (
         spark.read.parquet(str(sh_path))

@@ -24,14 +24,18 @@ Layout mirrors the metric store (partition pruning + ts-sorted rows):
 
 from __future__ import annotations
 
-import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    overwrite_partitions,
+    publish,
+    session_load_memo,
+)
 
 #: window aggregates answerable from the partials
 _DISTRIBUTIVE = {"sum", "avg", "min", "max", "count", "variance", "stddev"}
@@ -74,24 +78,50 @@ def point_partials(
     )
 
 
+def _partial_aggs() -> list:
+    """The merge of partial rows: cnt/sums add, min/max fold — shared
+    by the cascades and the increment merges."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("sum").alias("sum"),
+        F.sum("sum_sq").alias("sum_sq"),
+        F.min("min").alias("min"),
+        F.max("max").alias("max"),
+        F.sum("sum_conf").alias("sum_conf"),
+    ]
+
+
+def hist_partials(
+    points: DataFrame, res_ms: int = 60_000, dims: tuple[str, ...] = ()
+) -> DataFrame:
+    """Per-window value-count partials (v100 = round(value·100)) for a
+    batch of points — shared by the histogram builds and merges, plain
+    and tagged (``dims``)."""
+    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
+    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
+    return (
+        points.select("bucket", "metric", *dims, wts, v100)
+        .groupBy("bucket", "metric", *dims, "wts", "v100")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
 def _atomic_write(
     partials: DataFrame,
     out: Path,
-    tmp_name: str,
+    tmp_name: str | None = None,
     part_cols: tuple[str, ...] = ("bucket", "metric"),
     sort_cols: tuple[str, ...] = ("wts",),
     markers: dict[str, str] | None = None,
 ) -> Path:
-    """Write ``partials`` to ``out`` via tmp-dir + rename. ``markers``
+    """Write ``partials`` to ``out`` via tmp-dir (default
+    ``_tmp_<out name>``) + rename. ``markers``
     (e.g. ``{"_WIDTH": "8192"}``) are sidecar layout files written INTO
     the tmp dir BEFORE the rename: a reader can never observe a
     ``_SUCCESS``-complete store whose marker is missing — a store whose
     rows were hashed at a non-default layout but whose marker fell back
     to the default reads garbage positions silently."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
-    tmp = out.parent / tmp_name
+    tmp = out.parent / (tmp_name or f"_tmp_{out.name}")
     if tmp.exists():
         shutil.rmtree(tmp)
     laid = (
@@ -105,16 +135,7 @@ def _atomic_write(
     writer.parquet(str(tmp))
     for name, value in (markers or {}).items():
         (tmp / name).write_text(value)
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def _sidecar_markers(store: Path) -> dict[str, str]:
@@ -142,11 +163,7 @@ def build_rollup(
     out = _rollup_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    return _atomic_write(
-        point_partials(load_metrics(spark, sf_dir), res_ms),
-        out,
-        f"_tmp_rollup_{res_ms}ms",
-    )
+    return _atomic_write(point_partials(load_metrics(spark, sf_dir), res_ms), out)
 
 
 #: canonical column types build_rollup's writer produces — the merge
@@ -176,44 +193,14 @@ def merge_rollup_increment(
     write doesn't read from the path it overwrites. This is the batch
     twin of streaming.stream_rollup_partials (late/backfill data beyond
     the stream's watermark lands here)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     out = _rollup_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_rollup(spark, sf_dir, res_ms)
         return out
-    inc = point_partials(new_points, res_ms)
-    affected = inc.select("bucket", "metric").distinct()
-    existing = spark.read.parquet(str(out)).join(
-        F.broadcast(affected), ["bucket", "metric"], "left_semi"
+    return _merge_touched_partitions(
+        spark, out, point_partials(new_points, res_ms),
+        ["bucket", "metric", "wts"], _partial_aggs(), cast_types=_PARTIAL_TYPES,
     )
-    merged = (
-        existing.unionByName(inc)
-        .groupBy("bucket", "metric", "wts")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
-        .select(
-            "bucket", "metric", "wts",
-            *[F.col(c).cast(t).alias(c) for c, t in _PARTIAL_TYPES.items()],
-        )
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.repartition("bucket", "metric")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "metric")
-        .parquet(str(out))
-    )
-    return out
 
 
 def cascade_rollup(
@@ -228,59 +215,36 @@ def cascade_rollup(
     hierarchy costs one pass over the finer rollup, never a raw scan.
     This is how a 1s→1m→1h→1d ladder stays cheap to maintain at
     100 TB: each level reads only the level below."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     if to_res_ms % from_res_ms != 0:
         raise ValueError("coarse resolution must be a multiple of the fine one")
     out = _rollup_dir(sf_dir, to_res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    fine = load_rollup(spark, sf_dir, from_res_ms)
-    wts = (F.col("wts") - (F.col("wts") % F.lit(to_res_ms))).alias("w2")
+    return _cascade(load_rollup(spark, sf_dir, from_res_ms), out, to_res_ms)
+
+
+def _cascade(
+    fine: DataFrame, out: Path, to_res_ms: int, dims: tuple[str, ...] = ()
+) -> Path:
+    """Re-aggregate the finer level ``fine`` to ``to_res_ms`` windows
+    and write it as the store ``out``."""
+    w2 = (F.col("wts") - (F.col("wts") % F.lit(to_res_ms))).alias("w2")
     partials = (
         fine.select(
-            "bucket", "metric", wts, "cnt", "sum", "sum_sq", "min", "max", "sum_conf"
+            "bucket", "metric", *dims, w2,
+            "cnt", "sum", "sum_sq", "min", "max", "sum_conf",
         )
-        .groupBy("bucket", "metric", "w2")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
+        .groupBy("bucket", "metric", *dims, "w2")
+        .agg(*_partial_aggs())
         .withColumnRenamed("w2", "wts")
     )
-    tmp = out.parent / f"_tmp_rollup_{to_res_ms}ms"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        partials.repartition("bucket", "metric")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "metric")
-        .parquet(str(tmp))
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _atomic_write(partials, out)
 
 
 def load_rollup(spark: SparkSession, sf_dir: str, res_ms: int = 60_000) -> DataFrame:
     p = _rollup_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -402,34 +366,11 @@ def build_hist_rollup(
     out = _hist_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    m = load_metrics(spark, sf_dir)
-    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
-    partials = (
-        m.select("bucket", "metric", wts, v100)
-        .groupBy("bucket", "metric", "wts", "v100")
-        .agg(F.count("*").alias("cnt"))
+    return _atomic_write(
+        hist_partials(load_metrics(spark, sf_dir), res_ms),
+        out,
+        sort_cols=("wts", "v100"),
     )
-    tmp = out.parent / f"_tmp_rollup_hist_{res_ms}ms"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        partials.repartition("bucket", "metric")
-        .sortWithinPartitions("wts", "v100")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "metric")
-        .parquet(str(tmp))
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def load_hist_rollup(
@@ -438,8 +379,6 @@ def load_hist_rollup(
     p = _hist_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_hist_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -534,18 +473,21 @@ def build_distinct_rollup(
     out = _distinct_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    ev = load_events(spark, sf_dir)
+    return _atomic_write(
+        _sketch_partials(load_events(spark, sf_dir), res_ms, lg_k),
+        out,
+        part_cols=("event_type",),
+    )
+
+
+def _sketch_partials(events: DataFrame, res_ms: int, lg_k: int) -> DataFrame:
+    """HLL-sketch partials per (event_type, window) — shared by the
+    distinct build and merge."""
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    partials = (
-        ev.select("event_type", wts, "user_id")
+    return (
+        events.select("event_type", wts, "user_id")
         .groupBy("event_type", "wts")
         .agg(F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sketch"))
-    )
-    return _atomic_write(
-        partials,
-        out,
-        f"_tmp_rollup_distinct_{res_ms}ms",
-        part_cols=("event_type",),
     )
 
 
@@ -555,8 +497,6 @@ def load_distinct_rollup(
     p = _distinct_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_distinct_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -593,19 +533,11 @@ def merge_distinct_increment(
     are union-mergeable, so the increment is sketch-agg the new points
     and hll_union_agg against the stored cells — same shape as
     merge_rollup_increment, cost proportional to the new data."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     out = _distinct_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_distinct_rollup(spark, sf_dir, res_ms)
         return out
-    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    inc = (
-        new_events.select("event_type", wts, "user_id")
-        .groupBy("event_type", "wts")
-        .agg(F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sketch"))
-    )
+    inc = _sketch_partials(new_events, res_ms, lg_k)
     touched = inc.select("event_type").distinct()
     existing = spark.read.parquet(str(out)).join(
         F.broadcast(touched), "event_type", "left_semi"
@@ -616,15 +548,7 @@ def merge_distinct_increment(
         .agg(F.hll_union_agg("sketch", F.lit(True)).alias("sketch"))
         .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(str(out))
-    )
-    return out
+    return overwrite_partitions(merged, out, ("event_type",), ("wts",))
 
 
 # ------------------------------------------------- portable distinct
@@ -659,7 +583,6 @@ def build_portable_distinct_rollup(
     out = _pdistinct_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    invalidate_retention_memo()
     ev = load_events(spark, sf_dir)
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     regs = hll_registers(
@@ -668,10 +591,7 @@ def build_portable_distinct_rollup(
         "user_id",
     )
     return _atomic_write(
-        hll_pack(regs, ["event_type", "wts"]),
-        out,
-        f"_tmp_rollup_pdistinct_{res_ms}ms",
-        part_cols=("event_type",),
+        hll_pack(regs, ["event_type", "wts"]), out, part_cols=("event_type",)
     )
 
 
@@ -693,8 +613,6 @@ def load_portable_distinct_rollup(
             build_portable_distinct_rollup(spark, sf_dir, res_ms, force=True)
             df = spark.read.parquet(str(p))
         return df
-
-    from dqe_spark.sources.store import session_load_memo
 
     return session_load_memo(spark, ("store", str(p)), _load)
 
@@ -741,9 +659,6 @@ def merge_portable_distinct_increment(
     stored cells of the touched event_types — cost proportional to the
     new data, and the result equals a from-scratch rebuild (max is
     idempotent and associative; pinned in tests/test_rollup.py)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         hll_merge_packed,
         hll_pack,
@@ -754,7 +669,6 @@ def merge_portable_distinct_increment(
     if not (out / "_SUCCESS").exists():
         build_portable_distinct_rollup(spark, sf_dir, res_ms)
         return out
-    invalidate_retention_memo()
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = hll_pack(
         hll_registers(
@@ -771,15 +685,7 @@ def merge_portable_distinct_increment(
     merged = hll_merge_packed(
         existing.unionByName(inc), ["event_type", "wts"]
     ).localCheckpoint(eager=True)
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(str(out))
-    )
-    return out
+    return overwrite_partitions(merged, out, ("event_type",), ("wts",))
 
 
 # ----------------------------------------------------------------- tagged
@@ -813,9 +719,7 @@ def build_tagged_rollup(
     if not force and (out / "_SUCCESS").exists():
         return out
     return _atomic_write(
-        point_partials(load_metrics(spark, sf_dir), res_ms, dims=dims),
-        out,
-        f"_tmp_rollup_tagged_{res_ms}ms",
+        point_partials(load_metrics(spark, sf_dir), res_ms, dims=dims), out
     )
 
 
@@ -835,25 +739,9 @@ def cascade_tagged_rollup(
     out = _tagged_dir(sf_dir, to_res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    fine = load_tagged_rollup(spark, sf_dir, from_res_ms)
-    wts = (F.col("wts") - (F.col("wts") % F.lit(to_res_ms))).alias("w2")
-    partials = (
-        fine.select(
-            "bucket", "metric", *dims, wts,
-            "cnt", "sum", "sum_sq", "min", "max", "sum_conf",
-        )
-        .groupBy("bucket", "metric", *dims, "w2")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
-        .withColumnRenamed("w2", "wts")
+    return _cascade(
+        load_tagged_rollup(spark, sf_dir, from_res_ms), out, to_res_ms, dims
     )
-    return _atomic_write(partials, out, f"_tmp_rollup_tagged_{to_res_ms}ms")
 
 
 def load_tagged_rollup(
@@ -865,8 +753,6 @@ def load_tagged_rollup(
             cascade_tagged_rollup(spark, sf_dir, 60_000, res_ms)
         else:
             build_tagged_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -906,18 +792,9 @@ def build_tagged_hist_rollup(
     out = _tagged_hist_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    m = load_metrics(spark, sf_dir)
-    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
-    partials = (
-        m.select("bucket", "metric", *dims, wts, v100)
-        .groupBy("bucket", "metric", *dims, "wts", "v100")
-        .agg(F.count("*").alias("cnt"))
-    )
     return _atomic_write(
-        partials,
+        hist_partials(load_metrics(spark, sf_dir), res_ms, dims),
         out,
-        f"_tmp_rollup_tagged_hist_{res_ms}ms",
         sort_cols=("wts", "v100"),
     )
 
@@ -928,8 +805,6 @@ def load_tagged_hist_rollup(
     p = _tagged_hist_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_tagged_hist_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -957,9 +832,6 @@ def _merge_touched_partitions(
     """Shared increment fold: read only the (bucket, metric) partitions
     the increment touches, re-aggregate existing ∪ inc, dynamically
     overwrite exactly those directories."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     affected = inc.select("bucket", "metric").distinct()
     existing = spark.read.parquet(str(out)).join(
         F.broadcast(affected), ["bucket", "metric"], "left_semi"
@@ -970,16 +842,9 @@ def _merge_touched_partitions(
             *group_cols,
             *[F.col(c).cast(t).alias(c) for c, t in cast_types.items()],
         )
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.repartition("bucket", "metric")
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "metric")
-        .parquet(str(out))
+    return overwrite_partitions(
+        merged.localCheckpoint(eager=True), out, ("bucket", "metric"), sort_cols
     )
-    return out
 
 
 def merge_hist_increment(
@@ -993,15 +858,8 @@ def merge_hist_increment(
     out = _hist_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         return build_hist_rollup(spark, sf_dir, res_ms)
-    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
-    inc = (
-        new_points.select("bucket", "metric", wts, v100)
-        .groupBy("bucket", "metric", "wts", "v100")
-        .agg(F.count("*").alias("cnt"))
-    )
     return _merge_touched_partitions(
-        spark, out, inc,
+        spark, out, hist_partials(new_points, res_ms),
         ["bucket", "metric", "wts", "v100"],
         [F.sum("cnt").alias("cnt")],
         cast_types={"cnt": "long"},
@@ -1021,18 +879,9 @@ def merge_tagged_increment(
     out = _tagged_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         return build_tagged_rollup(spark, sf_dir, res_ms, dims=dims)
-    inc = point_partials(new_points, res_ms, dims=dims)
     return _merge_touched_partitions(
-        spark, out, inc,
-        ["bucket", "metric", *dims, "wts"],
-        [
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        ],
+        spark, out, point_partials(new_points, res_ms, dims=dims),
+        ["bucket", "metric", *dims, "wts"], _partial_aggs(),
         cast_types=_PARTIAL_TYPES,
     )
 
@@ -1048,15 +897,8 @@ def merge_tagged_hist_increment(
     out = _tagged_hist_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         return build_tagged_hist_rollup(spark, sf_dir, res_ms, dims=dims)
-    wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
-    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
-    inc = (
-        new_points.select("bucket", "metric", *dims, wts, v100)
-        .groupBy("bucket", "metric", *dims, "wts", "v100")
-        .agg(F.count("*").alias("cnt"))
-    )
     return _merge_touched_partitions(
-        spark, out, inc,
+        spark, out, hist_partials(new_points, res_ms, dims),
         ["bucket", "metric", *dims, "wts", "v100"],
         [F.sum("cnt").alias("cnt")],
         cast_types={"cnt": "long"},
@@ -1102,13 +944,6 @@ def expire_rollup_before(
     1m one year, 1h forever — rewrites only the small stores and
     unlinks the big one. Atomic tmp-dir rename, same as the builders.
     Returns the store path, or None if the level does not exist."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
-    # a live session may hold checkpointed day registers built from
-    # the pre-expiry pdistinct store — drop them too, or retention
-    # keeps serving windows that were just TTL-expired
-    invalidate_retention_memo()
     if ladder not in _LADDER_DIRS:
         raise ValueError(f"unknown ladder {ladder!r}: {sorted(_LADDER_DIRS)}")
     out = _LADDER_DIRS[ladder](sf_dir, res_ms)
@@ -1208,11 +1043,7 @@ def build_cms_rollup(
     # pattern of build_dsir_model): a crash can never leave a
     # _SUCCESS-complete auto-width store that reads back at the floor
     return _atomic_write(
-        regs,
-        out,
-        f"_tmp_rollup_cms_{res_ms}ms",
-        part_cols=("event_type",),
-        markers={"_WIDTH": str(w)},
+        regs, out, part_cols=("event_type",), markers={"_WIDTH": str(w)}
     )
 
 
@@ -1238,9 +1069,7 @@ def build_cms_watchlist(
         .limit(CMS_WATCH_K)
         .select("user_id")
     )
-    return _atomic_write(
-        top, out, "_tmp_cms_watchlist", part_cols=(), sort_cols=("user_id",)
-    )
+    return _atomic_write(top, out, part_cols=(), sort_cols=("user_id",))
 
 
 def load_cms_rollup(
@@ -1249,8 +1078,6 @@ def load_cms_rollup(
     p = _cms_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_cms_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -1260,8 +1087,6 @@ def load_cms_watchlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _cms_watch_dir(sf_dir)
     if not (p / "_SUCCESS").exists():
         build_cms_watchlist(spark, sf_dir)
-    from dqe_spark.sources.store import session_load_memo
-
     return session_load_memo(
         spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
     )
@@ -1287,9 +1112,6 @@ def merge_cms_increment(
     events source of record (then re-folds the in-hand increment).
     The check reads per-cell totals from the d=0 counter row (Σc over
     one hash row IS the cell's event count — no raw scan)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         auto_cms_width,
         cms_merge,
@@ -1332,31 +1154,7 @@ def merge_cms_increment(
         )
         build_cms_rollup(spark, sf_dir, res_ms, force=True, w=want)
         return merge_cms_increment(spark, new_events, sf_dir, res_ms)
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(str(out))
-    )
-    return out
-
-
-#: per-session memo of the checkpointed day-register/day-estimate
-#: relations: they are a pure function of (application, store dir) and
-#: sketch-bounded (≤ m rows per day cell), so repeated retention
-#: serves — any horizon — skip the unpack+merge+checkpoint the first
-#: call paid. Keyed by applicationId so a new session never sees a
-#: dead checkpoint; invalidated by the store builders/mergers below.
-_DREG_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-def invalidate_retention_memo() -> None:
-    """Drop memoized day registers — called whenever the portable
-    distinct store changes under a live session (rebuild, increment),
-    so a serve never reads a stale checkpoint."""
-    _DREG_MEMO.clear()
+    return overwrite_partitions(merged, out, ("event_type",), ("wts",))
 
 
 def portable_retention_1d(
@@ -1391,20 +1189,15 @@ def portable_retention_1d(
     # measured). Registers are sketch-bounded (≤ m rows per day cell
     # at ANY corpus size), so an eager localCheckpoint is safe and
     # keeps the serve one store read. The checkpointed relations are
-    # memoized per (application, store dir): a warm serve pays only
-    # the pair-key folds, not the unpack+merge — any offset_days
-    # horizon shares the same memo entry (the horizon only enters at
-    # the pair explode below).
+    # a pure function of the store, so they live in the store load memo
+    # (store.session_load_memo; any write drops them): a warm serve
+    # pays only the pair-key folds, not the unpack+merge — any
+    # offset_days horizon shares the same memo entry (the horizon only
+    # enters at the pair explode below).
     # ``checkpoint=False`` keeps full lineage in the plan so the
     # serving-path guard can assert store-only scans; the default
     # serves through the barriers.
-    memo_key = (
-        spark.sparkContext.applicationId,
-        str(_pdistinct_dir(sf_dir, 3_600_000)),
-    )
-    if checkpoint and memo_key in _DREG_MEMO:
-        dreg, dest = _DREG_MEMO[memo_key]
-    else:
+    def day_registers():
         sk = load_portable_distinct_rollup(spark, sf_dir, 3_600_000)
         hreg = hll_unpack(sk, ["event_type", "wts"])
         _bar = (
@@ -1420,11 +1213,17 @@ def portable_retention_1d(
                 ["event_type", "wts"],
             )
         )
-        dest = _bar(
+        return dreg, _bar(
             hll_estimate(dreg, ["event_type", "wts"], "approx_users")
         )
-        if checkpoint:
-            _DREG_MEMO[memo_key] = (dreg, dest)
+
+    dreg, dest = (
+        session_load_memo(
+            spark, ("dreg", str(_pdistinct_dir(sf_dir, 3_600_000))), day_registers
+        )
+        if checkpoint
+        else day_registers()
+    )
     OFF = offset_days * DAY
     preg = hll_merge(
         dreg.select(

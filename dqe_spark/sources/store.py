@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,17 +106,7 @@ def ingest(
             .partitionBy("bucket", "dt")
         )
     writer.parquet(str(tmp))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # lost a concurrent race: someone else finished first — use theirs
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def load(
@@ -175,15 +166,17 @@ DEFAULT_BUCKETS = 32
 BUCKETED_TARGET_ROWS = 4_000_000
 
 
-#: per-session memo of loaded store DataFrames: re-planning a serve
+#: THE per-session memo of loaded stores (and of values derived only
+#: from a store, like the retention day registers): re-planning a serve
 #: re-lists the store's parquet files every call (measured 0.68 s of a
 #: 0.95 s warm serve at sf0.1 — the file index, not execution, was the
 #: wall). A loaded DataFrame carries its InMemoryFileIndex, so reusing
 #: the OBJECT skips the relisting while the plan still shows the real
 #: store scan (serving-path guards keep working — nothing is
 #: checkpointed or cached here, only the analyzed relation reused).
-#: Keyed by applicationId so a new session never sees stale state;
-#: EVERY store mutation calls invalidate_load_memo().
+#: Keyed by applicationId so a new session never sees stale state.
+#: Invalidated where bytes land: publish() and overwrite_partitions()
+#: clear it after every store write. Never rebound, only cleared.
 _LOAD_MEMO: dict[tuple, object] = {}
 
 
@@ -191,16 +184,78 @@ def session_load_memo(spark, key: tuple, build):
     """Memoize ``build()`` (a loaded store DataFrame or metadata blob)
     per (application, *key). See _LOAD_MEMO for why."""
     k = (spark.sparkContext.applicationId, *key)
-    if k not in _LOAD_MEMO:
-        _LOAD_MEMO[k] = build()
-    return _LOAD_MEMO[k]
+    # one lookup: a write on another thread may clear the memo at any
+    # point between two
+    v = _LOAD_MEMO.get(k)
+    if v is None:
+        v = _LOAD_MEMO[k] = build()
+    return v
 
 
 def invalidate_load_memo() -> None:
-    """Drop every memoized store load — called by every writer that
-    mutates a store directory (build, increment merge, TTL expire,
-    purge), coarse on purpose: correctness over warm latency."""
+    """Drop every memoized store load, coarse on purpose: correctness
+    over warm latency. The two write helpers below call it; code that
+    changes a store's files by hand calls it too."""
     _LOAD_MEMO.clear()
+
+
+def publish(tmp: Path, out: Path, done: str = "_SUCCESS") -> Path:
+    """Replace the store ``out`` with the completely written ``tmp``
+    dir: remove the old dir, rename the new one in. A reader sees the
+    old store, no store, or the new one — never a partial write.
+    Losing a concurrent race (another writer renamed first) is fine
+    when the winner's ``out/<done>`` marker exists: theirs is used and
+    ``tmp`` dropped."""
+    try:
+        if out.exists():
+            shutil.rmtree(out)
+        out.parent.mkdir(parents=True, exist_ok=True)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not (out / done).exists():
+                raise
+            shutil.rmtree(tmp, ignore_errors=True)
+    finally:
+        # even a failed write may have removed files a memo entry lists
+        invalidate_load_memo()
+    return out
+
+
+def overwrite_partitions(
+    df: DataFrame,
+    out: Path,
+    part_cols: Sequence[str],
+    sort_cols: Sequence[str],
+    vacate: Iterable | None = None,
+) -> Path:
+    """Rewrite exactly the partitions of the store ``out`` that ``df``
+    holds rows for (dynamic partition overwrite), ``df`` repartitioned
+    by ``part_cols`` and sorted within partitions by ``sort_cols``.
+    ``df`` must not read from ``out`` lazily (checkpoint it first).
+
+    Dynamic overwrite never touches a partition with no output rows,
+    so a partition emptied by a merge or purge would keep its old rows.
+    ``vacate`` lists the values of the (single) partition column that
+    the caller rewrote; those absent from ``df`` are deleted."""
+    try:
+        (
+            df.repartition(*part_cols)
+            .sortWithinPartitions(*sort_cols)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*part_cols)
+            .parquet(str(out))
+        )
+        if vacate:
+            (col,) = part_cols
+            present = {r[0] for r in df.select(col).distinct().collect()}
+            for v in vacate:
+                if v not in present:
+                    shutil.rmtree(out / f"{col}={v}", ignore_errors=True)
+    finally:
+        invalidate_load_memo()
+    return out
 
 
 def auto_buckets(
@@ -398,14 +453,7 @@ def compact(
     sort_cols = ["bucket", "dt"] + [
         c for c in ("metric", "event_type") if c in sub.columns
     ] + ["ts_ms"]
-    (
-        sub.repartition(len(keys), "bucket", "dt")
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "dt")
-        .parquet(str(out))
-    )
+    overwrite_partitions(sub, out, ("bucket", "dt"), sort_cols)
     return [str(d) for _, _, d in offenders]
 
 
@@ -449,16 +497,7 @@ def ingest_events(spark: SparkSession, sf_dir: str, force: bool = False) -> Path
         .partitionBy("bucket", "dt")
         .parquet(str(tmp))
     )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def load_events_store(spark: SparkSession, sf_dir: str) -> DataFrame | None:

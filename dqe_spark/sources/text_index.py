@@ -41,7 +41,6 @@ file.
 
 from __future__ import annotations
 
-import os
 import re
 import shutil
 import zlib
@@ -50,7 +49,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import STORE_ROOT, overwrite_partitions, publish
 
 N_BUCKETS_DEFAULT = 64
 
@@ -156,16 +155,7 @@ def build_text_index(
         str(tmp / "_docstats")
     )
     (tmp / "_BUCKETS").write_text(str(n_buckets))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if index_path(sf_dir) is None:
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(tmp, out)
 
 
 def merge_index_increment(
@@ -196,14 +186,7 @@ def merge_index_increment(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("tb")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tb")
-        .parquet(str(p))
-    )
+    overwrite_partitions(merged, p, ("tb",), ("token", "doc_id"))
     # doc stats follow the same contract (append of new doc_ids, the
     # distinct absorbs idempotent re-landing). Small table; at true
     # corpus scale partition by ingest date and append instead.
@@ -463,22 +446,23 @@ def purge_doc_ids(
     p = _index_dir(sf_dir)
     ids = F.broadcast(doc_ids.select("doc_id").distinct())
     idx = spark.read.parquet(str(p))
-    touched = (
-        idx.join(ids, "doc_id", "left_semi").select("tb").distinct()
-    )
+    touched = sorted(
+        r["tb"]
+        for r in idx.join(ids, "doc_id", "left_semi")
+        .select("tb")
+        .distinct()
+        .collect()
+    )  # driver-side, bounded by the bucket count
     kept = (
-        idx.join(F.broadcast(touched), "tb", "left_semi")
+        idx.where(F.col("tb").isin(touched))
         .join(ids, "doc_id", "left_anti")
         .select("doc_id", "token", "tf", "positions", "tb")
         .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("tb")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tb")
-        .parquet(str(p))
+    # vacate: a bucket whose every posting belongs to purged docs
+    # yields no output partition, and its postings must not survive
+    overwrite_partitions(
+        kept, p, ("tb",), ("token", "doc_id"), vacate=touched
     )
     ds_path = p / "_docstats"
     ds = (

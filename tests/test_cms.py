@@ -436,18 +436,22 @@ def test_cms_oracle_width_gate_is_loud(spark):
 
 def test_expire_invalidates_retention_memo(spark):
     """expire_rollup_before drops the memoized day registers (round-9
-    advisor, medium): a live session's checkpointed _DREG_MEMO was
-    built from the pre-expiry pdistinct store, so keeping it would
+    advisor, medium): a live session's checkpointed day registers were
+    built from the pre-expiry pdistinct store, so keeping them would
     serve retention windows that were just TTL-expired."""
     from dqe_spark.sources import rollup as R
+    from dqe_spark.sources.store import _LOAD_MEMO, invalidate_load_memo
+
+    def dreg_entries():
+        return [k for k in _LOAD_MEMO if k[1] == "dreg"]
 
     res = 3_600_000
     R.build_portable_distinct_rollup(spark, SF_SMOKE, res, force=True)
-    R.invalidate_retention_memo()
+    invalidate_load_memo()
     R.portable_retention_1d(spark, SF_SMOKE).collect()
-    assert R._DREG_MEMO
+    assert dreg_entries()
     try:
         R.expire_rollup_before(spark, SF_SMOKE, 0, res, "pdistinct")
-        assert not R._DREG_MEMO
+        assert not dreg_entries()
     finally:
         R.build_portable_distinct_rollup(spark, SF_SMOKE, res, force=True)

@@ -24,6 +24,25 @@ def test_readme_counts_match_registry():
     )
 
 
+def test_broken_registry_module_raises(monkeypatch):
+    """A registry module that fails to import must raise from the
+    registry, not silently shrink it (or surface as a misleading
+    PRIORITY KeyError)."""
+    import sys
+
+    import pytest
+
+    import dqe_spark
+    from dqe_spark.entry import all_oracles, all_queries
+
+    monkeypatch.delattr(dqe_spark, "queries_dql", raising=False)
+    monkeypatch.setitem(sys.modules, "dqe_spark.queries_dql", None)
+    with pytest.raises(ImportError):
+        all_oracles()
+    with pytest.raises(ImportError):
+        all_queries()
+
+
 def test_priority_prefix_is_stable():
     """The driver's correctness gate checks a PREFIX of queries(); the
     PRIORITY list pins those keys. Rounds 2-4 kept them frozen — any

@@ -534,30 +534,39 @@ def test_expire_rollup_before_drops_old_windows(spark):
     assert R.expire_rollup_before(spark, SF_SMOKE, 0, 7_000, "rollup") is None
 
 
+def dreg_entries() -> list:
+    """The memoized retention day registers in the store load memo."""
+    from dqe_spark.sources.store import _LOAD_MEMO
+
+    return [v for k, v in _LOAD_MEMO.items() if k[1] == "dreg"]
+
+
 def test_retention_memo_reuses_day_registers_and_invalidates(spark):
     """Warm retention serves reuse the per-session checkpointed
     day-register relation (round-9 ask #1: repeated serves skip the
     unpack+merge), results are identical across cold/warm calls and
-    horizons share the memo; a store mutation drops the memo so no
-    serve reads a stale checkpoint."""
+    horizons share the memo entry; a store mutation drops the entry so
+    no serve reads a stale checkpoint. The entry lives in the single
+    store load memo."""
     from dqe_spark.sources import rollup as R
+    from dqe_spark.sources.store import invalidate_load_memo
 
-    R.invalidate_retention_memo()
-    assert not R._DREG_MEMO
+    invalidate_load_memo()
+    assert not dreg_entries()
     cold = {tuple(r) for r in R.portable_retention_1d(spark, SF_SMOKE).collect()}
-    assert len(R._DREG_MEMO) == 1
-    memo_val = next(iter(R._DREG_MEMO.values()))
+    (memo_val,) = dreg_entries()
     warm = {tuple(r) for r in R.portable_retention_1d(spark, SF_SMOKE).collect()}
     assert warm == cold and cold
     # same memo entry served the warm call (no rebuild)
-    assert next(iter(R._DREG_MEMO.values())) is memo_val
+    assert dreg_entries()[0] is memo_val
     # a different horizon reuses the SAME day registers
     R.portable_retention_1d(spark, SF_SMOKE, offset_days=7).collect()
-    assert len(R._DREG_MEMO) == 1
-    assert next(iter(R._DREG_MEMO.values())) is memo_val
+    (again_val,) = dreg_entries()
+    assert again_val is memo_val
     # the lineage-auditable path bypasses the memo entirely
     R.portable_retention_1d(spark, SF_SMOKE, checkpoint=False)
-    assert next(iter(R._DREG_MEMO.values())) is memo_val
+    (again_val,) = dreg_entries()
+    assert again_val is memo_val
     # store mutations invalidate: increment with a tiny batch, memo is
     # dropped, and the next serve rebuilds from the merged store
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(0)
@@ -566,6 +575,6 @@ def test_retention_memo_reuses_day_registers_and_invalidates(spark):
     R.merge_portable_distinct_increment(
         spark, ev.withColumn("ts_ms", ts_ms_col(ev)), SF_SMOKE
     )
-    assert not R._DREG_MEMO
+    assert not dreg_entries()
     again = {tuple(r) for r in R.portable_retention_1d(spark, SF_SMOKE).collect()}
     assert again == cold  # empty increment: rebuild equals original

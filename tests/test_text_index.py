@@ -274,3 +274,24 @@ def test_increment_file_counts_stay_bounded(spark):
     finally:
         TI.build_text_index(spark, SF_SMOKE, force=True)
         MS.build_minhash_store(spark, SF_SMOKE, force=True)
+
+
+def test_purge_of_every_doc_leaves_no_postings(spark, tmp_path):
+    """Purging every indexed doc empties every token bucket: a bucket
+    whose postings all belong to purged docs has no output partition,
+    so it is vacated rather than left serving the purged postings."""
+    import shutil
+
+    from dqe_spark.sources import text_index as TI
+    from dqe_spark.sources.store import STORE_ROOT
+
+    sf = str(tmp_path / "ti_purge_all")
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(20)
+    try:
+        p = TI.build_text_index(spark, sf, docs=docs)
+        assert list(p.glob("tb=*/*.parquet"))
+        TI.purge_doc_ids(spark, sf, docs.select("doc_id"))
+        assert not list(p.glob("tb=*/*.parquet"))
+        assert spark.read.parquet(str(p / "_docstats")).count() == 0
+    finally:
+        shutil.rmtree(STORE_ROOT / "ti_purge_all", ignore_errors=True)
