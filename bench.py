@@ -246,13 +246,8 @@ def main() -> None:
 
     store.ingest(spark, SF_DIR)
     store.ingest_events(spark, SF_DIR)
-    rollup.build_rollup(spark, SF_DIR, 60_000)
-    rollup.build_hist_rollup(spark, SF_DIR, 60_000)
-    rollup.build_tagged_rollup(spark, SF_DIR, 60_000)
-    rollup.build_tagged_hist_rollup(spark, SF_DIR, 60_000)
-    rollup.build_distinct_rollup(spark, SF_DIR, 3_600_000)
-    rollup.build_portable_distinct_rollup(spark, SF_DIR, 3_600_000)
-    rollup.build_cms_rollup(spark, SF_DIR, 3_600_000)
+    for kind in rollup.LADDER:  # every ladder kind at its base resolution
+        rollup.build(kind, spark, SF_DIR)
     rollup.build_cms_watchlist(spark, SF_DIR)
     from dqe_spark.sources import ann_store, dsir_store, media_store, text_index
 

@@ -8,7 +8,7 @@ planning. See SURVEY.md for the blueprint and the reference citations.
 Public surface:
   - ``dqe_spark.session.get_spark()``          — tuned SparkSession
   - ``dqe_spark.sources.metric_store``         — the F1 metric-point store
-  - ``dqe_spark.engine.run(spark, dql, ...)``  — run a DQL query string
+  - ``dqe_spark.engine.plan(spark, dql, ...)`` — plan a DQL query string
   - ``dqe_spark.operators.*``                  — direct DataFrame operators
 """
 

@@ -348,10 +348,7 @@ class Compiler:
         resolutions: dict[str, int] | None = None,
         now_ms: int | None = None,
         registry=None,
-        rollups: dict[int, DataFrame] | None = None,
-        hist_rollups: dict[int, DataFrame] | None = None,
-        tagged_rollups: dict[int, DataFrame] | None = None,
-        tagged_hist_rollups: dict[int, DataFrame] | None = None,
+        rollups: dict[str, dict[int, DataFrame]] | None = None,
         cache_shared_scans: bool = False,
         dense: bool = False,
         sf_dir: str | None = None,
@@ -366,18 +363,13 @@ class Compiler:
         self.resolutions = resolutions or {}
         self.now_ms = now_ms if now_ms is not None else int(_time.time() * 1000)
         self.registry = registry if registry is not None else default_registry()
-        # res_ms -> partials DataFrame (sources/rollup.py); when set,
-        # eligible windowed aggregates are rewritten to read partials
+        # ladder name -> res_ms -> partials DataFrame (sources/rollup.py
+        # LADDER: "rollup", "hist", "tagged", "tagged_hist"); when set,
+        # eligible windowed aggregates are rewritten to read partials.
+        # The tagged levels carry TAGGED_DIMS in the key, so scans whose
+        # WHERE touches only those dims stay rollup-rewritable — the dim
+        # predicate filters partials
         self.rollups = rollups or {}
-        self.hist_rollups = hist_rollups or {}
-        # res_ms -> TAGGED partials (sources/rollup.py TAGGED_DIMS in
-        # the key): lets scans whose WHERE touches only those dims stay
-        # rollup-rewritable — the dim predicate filters partials
-        self.tagged_rollups = tagged_rollups or {}
-        # tagged HISTOGRAM partials: tag-filtered percentile/median
-        # from per-(dims, window) value counts (sources/rollup.py
-        # build_tagged_hist_rollup)
-        self.tagged_hist_rollups = tagged_hist_rollups or {}
         # duplicate-scan CSE (the reference's dflow `optimize` merges
         # duplicate gets, src/dqe.erl:204-225). Identical terminals in
         # one compile always share the same DataFrame object (Catalyst
@@ -944,30 +936,21 @@ class Compiler:
         )
         if not (scalar or quantile):
             return None
+        # dim-only WHERE: rewrite from the TAGGED levels (the dim
+        # predicate filters partials; histogram counts re-merge into the
+        # window's exact value multiset)
         tagged = not sub.pristine and sub.scan_tag_pred is not None
-        if tagged:
-            # dim-only WHERE: rewrite from TAGGED partials — scalar
-            # from the tagged scalar store, quantile from the tagged
-            # HISTOGRAM store (dim predicate filters partials, counts
-            # re-merge into the window's exact value multiset)
-            if quantile:
-                if not self.tagged_hist_rollups:
-                    return None
-                levels = self.tagged_hist_rollups
-            elif self.tagged_rollups:
-                levels = self.tagged_rollups
-            else:
-                return None
-        elif not self.rollups or not sub.pristine:
+        if not (tagged or sub.pristine):
             return None
-        else:
-            levels = self.hist_rollups if quantile else self.rollups
-            if quantile and not self.hist_rollups:
-                return None
+        scalar_kind = "tagged" if tagged else "rollup"
+        kind = ("tagged_hist" if tagged else "hist") if quantile else scalar_kind
+        levels = self.rollups.get(kind)
+        if not levels:
+            return None
         if quantile and sub.shift_ms:
             return None  # hist path doesn't restamp; raw scan is correct
         # per-window confidence joins in from the matching scalar store
-        conf_src = self.tagged_rollups if tagged else self.rollups
+        conf_src = self.rollups.get(scalar_kind, {})
         start, end = sub.scan_range
         for res in sorted(levels, reverse=True):
             if (
@@ -980,7 +963,8 @@ class Compiler:
             ):
                 if quantile:
                     return self._quantile_from_hist(
-                        sub, name, consts, node, wms, res, tagged=tagged
+                        sub, name, consts, node, wms, res, levels[res],
+                        conf_src[res], tagged,
                     )
                 from dqe_spark.sources.rollup import partial_value_expr, rewindow
 
@@ -1015,14 +999,15 @@ class Compiler:
 
     def _quantile_from_hist(
         self, sub: SeriesFrame, name: str, consts, node, wms: int, res: int,
-        tagged: bool = False,
+        hist: DataFrame, scalar: DataFrame, tagged: bool,
     ) -> SeriesFrame:
-        """median/percentile answered from the histogram rollup (exact
-        for fixed-decimal values, sources/rollup.py); the per-window
-        confidence average joins in from the scalar rollup. With
-        ``tagged`` both sides read the TAGGED stores and apply the dim
-        predicate to the partials before counts merge."""
-        from dqe_spark.sources.rollup import hist_rollup_percentile
+        """median/percentile answered from the histogram level ``hist``
+        at ``res`` (exact for fixed-decimal values, sources/rollup.py);
+        the per-window confidence average joins in from the scalar level
+        ``scalar`` of the same resolution. With ``tagged`` both are the
+        TAGGED levels and the dim predicate applies to the partials
+        before counts merge."""
+        from dqe_spark.sources.rollup import hist_rollup_percentile, rewindow
 
         if name == "percentile":
             p = consts[0]
@@ -1049,16 +1034,12 @@ class Compiler:
                 out = out.where(sub.scan_tag_pred)
             return out
 
-        hist_src = self.tagged_hist_rollups if tagged else self.hist_rollups
-        conf_src = self.tagged_rollups if tagged else self.rollups
         val = hist_rollup_percentile(
-            scoped(hist_src[res]), wms, float(p), rollup_res_ms=res
+            scoped(hist), wms, float(p), rollup_res_ms=res
         ).select("metric", "wts", "value")
-        from dqe_spark.sources.rollup import rewindow as _rw
-
         conf = (
-            scoped(conf_src[res])
-            .withColumn("wts2", _rw(wms))
+            scoped(scalar)
+            .withColumn("wts2", rewindow(wms))
             .groupBy("metric", "wts2")
             .agg(
                 (F.sum("sum_conf").cast("double") / F.sum("cnt")).alias("confidence")

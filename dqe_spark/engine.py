@@ -1,8 +1,8 @@
 """Engine facade: run DQL query strings against the metric store.
 
     from dqe_spark import engine
-    results = engine.run(spark, "SELECT avg('events'.'click' BUCKET 'events', 1m) LAST 30m",
-                         sf_dir="/root/testdata/sf0.001", now_ms=...)
+    results = engine.plan(spark, "SELECT avg('events'.'click' BUCKET 'events', 1m) LAST 30m",
+                          sf_dir="data/sf0.001", now_ms=...)
 
 Each result is a Result(name, kind, df, resolution_ms); df is a lazy
 DataFrame — callers collect/write it (the reference's dqe:run returns
@@ -31,31 +31,31 @@ _STORE_MEMO = _LOAD_MEMO
 
 
 def _rollup_stores(spark: SparkSession, sf_dir: str):
-    """The rollup ladder levels the compiler may rewrite onto. Each
-    loader is memoized per session by store.session_load_memo, and
-    every store write drops the memo, so a warm plan re-lists nothing
-    and a plan after a merge reads the merged files."""
+    """The rollup ladder levels the compiler may rewrite onto, by ladder
+    name and resolution. Each loader is memoized per session by
+    store.session_load_memo, and every store write drops the memo, so a
+    warm plan re-lists nothing and a plan after a merge reads the merged
+    files. A missing 1h level is cascaded from the 1m level by its
+    loader."""
     from dqe_spark.sources.rollup import (
-        cascade_rollup,
         load_hist_rollup,
         load_rollup,
         load_tagged_hist_rollup,
         load_tagged_rollup,
     )
 
-    cascade_rollup(spark, sf_dir, 60_000, 3_600_000)
-    return (
-        {
+    return {
+        "rollup": {
             60_000: load_rollup(spark, sf_dir, 60_000),
             3_600_000: load_rollup(spark, sf_dir, 3_600_000),
         },
-        {60_000: load_hist_rollup(spark, sf_dir, 60_000)},
-        {
+        "hist": {60_000: load_hist_rollup(spark, sf_dir, 60_000)},
+        "tagged": {
             60_000: load_tagged_rollup(spark, sf_dir, 60_000),
             3_600_000: load_tagged_rollup(spark, sf_dir, 3_600_000),
         },
-        {60_000: load_tagged_hist_rollup(spark, sf_dir, 60_000)},
-    )
+        "tagged_hist": {60_000: load_tagged_hist_rollup(spark, sf_dir, 60_000)},
+    }
 
 
 def plan(
@@ -68,39 +68,21 @@ def plan(
 ) -> list[Result]:
     """Parse + compile; returns lazy per-statement results.
 
-    use_rollups=True materializes (once) and registers the 1m rollup
-    store, letting the compiler rewrite eligible distributive window
-    aggregates to read pre-aggregated partials instead of raw points."""
-    rollups = hist_rollups = tagged_rollups = tagged_hist_rollups = None
-    if use_rollups:
-        rollups, hist_rollups, tagged_rollups, tagged_hist_rollups = (
-            _rollup_stores(spark, sf_dir)
-        )
+    use_rollups=True loads the rollup ladder levels (building any that
+    are missing), letting the compiler rewrite eligible distributive
+    and quantile window aggregates to read pre-aggregated partials
+    instead of raw points."""
     ast = parse(dql)
     comp = Compiler(
         metrics=load_metrics(spark, sf_dir),
         events=load_events(spark, sf_dir),
         resolutions=BUCKET_RESOLUTION_MS,
         now_ms=now_ms,
-        rollups=rollups,
-        hist_rollups=hist_rollups,
-        tagged_rollups=tagged_rollups,
-        tagged_hist_rollups=tagged_hist_rollups,
+        rollups=_rollup_stores(spark, sf_dir) if use_rollups else None,
         dense=dense,
         sf_dir=sf_dir,
     )
     return comp.compile(ast)
-
-
-def run(
-    spark: SparkSession,
-    dql: str,
-    sf_dir: str,
-    now_ms: int | None = None,
-    use_rollups: bool = False,
-    dense: bool = False,
-) -> list[Result]:
-    return plan(spark, dql, sf_dir, now_ms, use_rollups, dense)
 
 
 def explain(

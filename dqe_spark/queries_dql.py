@@ -34,7 +34,7 @@ def q(name: str, oracle: str):
 
 
 def _one(spark, dql, sf_dir):
-    (res,) = engine.run(spark, dql, sf_dir)
+    (res,) = engine.plan(spark, dql, sf_dir)
     return res.df
 
 
@@ -317,7 +317,7 @@ FROM m GROUP BY 1, 2
 """,
 )
 def dql_rollup_avg_1h(spark, sf_dir):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         f"SELECT avg('events'.* BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}",
         sf_dir,
@@ -416,7 +416,7 @@ def dql_group_by_product(spark, sf_dir):
     )
 
 
-# LAST + AGO timeframes end-to-end with a pinned clock (engine.run's
+# LAST + AGO timeframes end-to-end with a pinned clock (engine.plan's
 # now_ms; wall-clock `now` evaluation src/dql_resolution.erl:242-244)
 @q(
     "dql_last_pinned_now",
@@ -430,7 +430,7 @@ GROUP BY 1
 """,
 )
 def dql_last_pinned_now(spark, sf_dir):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) LAST 2d",
         sf_dir,
@@ -451,7 +451,7 @@ GROUP BY 1
 """,
 )
 def dql_between_ago(spark, sf_dir):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) BETWEEN 5d AGO AND 1d AGO",
         sf_dir,
@@ -599,7 +599,7 @@ def dql_custom_fun(spark, sf_dir):
     reg = default_registry()
     reg.register_aggregate("span", lambda v: rounded(SF.max(v) - SF.min(v)))
     try:
-        # compile is eager (engine.run builds the DataFrame now), so the
+        # compile is eager (engine.plan builds the DataFrame now), so the
         # registration can be dropped immediately — the default catalog
         # stays at its reference parity count for later callers.
         df = _one(
@@ -640,7 +640,7 @@ FROM p
 """,
 )
 def dql_rollup_stddev_1h(spark, sf_dir):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         f"SELECT stddev('events'.* BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}",
         sf_dir,
@@ -668,7 +668,7 @@ SELECT 'total' AS name, wts, s AS value FROM w
 """,
 )
 def dql_multi_stmt(spark, sf_dir):
-    r1, r2 = engine.run(
+    r1, r2 = engine.plan(
         spark,
         "SELECT avg(q, 1h) AS 'mean', sum(q, 1h) AS 'total' "
         "ALIAS 'events'.'click' BUCKET 'events' AS q "
@@ -720,7 +720,7 @@ def dql_rollup_where_dc_avg_1h(spark, sf_dir):
     """Tag-filtered window aggregate answered from the TAGGED rollup
     (dim predicates on partials; plan-asserted in
     tests/test_rollup_rewrite.py::test_tagged_rewrite_used_and_matches_raw)."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' FROM 'events' WHERE 'dc' = 'east', 1h) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -750,7 +750,7 @@ def dql_rollup_where_dc_p90_1h(spark, sf_dir):
     filters partials, per-window value counts re-merge into the exact
     multiset, quantile interpolates — no raw-point scan. Plan-asserted
     in tests/test_rollup_rewrite.py::test_tagged_hist_quantile_rewrite."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT percentile('events'.'click' FROM 'events' WHERE 'dc' = 'east', "
         f"0.9, 1h) BETWEEN {JAN1} AND {FEB1}",

@@ -900,7 +900,7 @@ def dense_avg_1m(spark, sf_dir):
     # end-to-end through parse → compile → finalize
     from dqe_spark import engine
 
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1m) "
         f"BETWEEN {JAN5} AND {JAN5 + D_MS}",

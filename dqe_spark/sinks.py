@@ -3,7 +3,7 @@
 The reference's sinks collect chunks to the caller
 (``/root/reference/src/dqe_collect.erl:14-43``, funnel
 ``src/dqe_funnel.erl:9-57``); the engine mirrors that with
-``engine.run``'s named in-memory results. This module is the other
+``engine.plan``'s named in-memory results. This module is the other
 half a Spark deployment needs: durable, partitioned, atomically
 published file output for downstream consumers.
 
@@ -80,7 +80,7 @@ def export_named_results(
     root: str,
     format: str = "parquet",
 ) -> dict[str, str]:
-    """Write every named result of an ``engine.run`` (a list of objects
+    """Write every named result of an ``engine.plan`` (a list of objects
     with ``.name`` and ``.df``) under ``root/<safe_name>/``. Returns
     {name: path}. Names are sanitized for the filesystem only — the
     original name is preserved in the returned mapping."""

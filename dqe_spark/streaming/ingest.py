@@ -124,63 +124,24 @@ def stream_rollup_partials(
     metrics: DataFrame,
     res: str = "1 minute",
     watermark: str = "5 minutes",
+    dims: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Continuous rollup maintenance: the streaming twin of
-    sources/rollup.build_rollup — per (metric, base-window) mergeable
-    partials (cnt, sum, sum_sq, min, max, sum_conf) with an event-time
-    watermark bounding state. Appended windows land in the same layout
-    the batch rollup writes, so the query-side rollup rewrite reads
-    streamed and backfilled partials identically; late points beyond
-    the watermark belong to the batch backfill path."""
-    dec = F.col("value").cast("decimal(18,2)")
-    return (
-        metrics.withWatermark("ts", watermark)
-        .groupBy("bucket", "metric", F.window("ts", res).alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum(dec).alias("sum"),
-            F.sum(dec * dec).alias("sum_sq"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum(F.col("confidence").cast("decimal(18,2)")).alias("sum_conf"),
-        )
-        .select(
-            "bucket",
-            "metric",
-            F.unix_millis(F.col("w.start")).alias("wts"),
-            "cnt",
-            "sum",
-            "sum_sq",
-            "min",
-            "max",
-            "sum_conf",
-        )
-    )
+    """Continuous rollup maintenance: the streaming twin of the batch
+    scalar ladder (sources/rollup.py, with ``dims`` the tagged one) —
+    per (metric, dims, base-window) the same mergeable partials
+    (rollup.point_aggs) with an event-time watermark bounding state.
+    Appended windows land in the same layout the batch rollup writes,
+    so the query-side rollup rewrite reads streamed and backfilled
+    partials identically; late points beyond the watermark belong to
+    the batch backfill path. Tagged input must come from
+    stream_metrics(with_dims=True); dims are low-cardinality, so state
+    stays a small constant factor over the plain streaming rollup."""
+    from dqe_spark.sources.rollup import point_aggs
 
-
-def stream_tagged_rollup_partials(
-    metrics: DataFrame,
-    res: str = "1 minute",
-    watermark: str = "5 minutes",
-    dims: tuple[str, ...] = ("host", "dc", "user"),
-) -> DataFrame:
-    """Streaming twin of sources/rollup.build_tagged_rollup: the same
-    mergeable partials keyed by (metric, dims, window). Input must come
-    from stream_metrics(with_dims=True). State per (metric, dim-combo,
-    open window) — dims are low-cardinality, so state stays a small
-    constant factor over the plain streaming rollup."""
-    dec = F.col("value").cast("decimal(18,2)")
     return (
         metrics.withWatermark("ts", watermark)
         .groupBy("bucket", "metric", *dims, F.window("ts", res).alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum(dec).alias("sum"),
-            F.sum(dec * dec).alias("sum_sq"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum(F.col("confidence").cast("decimal(18,2)")).alias("sum_conf"),
-        )
+        .agg(*point_aggs())
         .select(
             "bucket", "metric", *dims,
             F.unix_millis(F.col("w.start")).alias("wts"),
@@ -195,15 +156,16 @@ def stream_hist_partials(
     watermark: str = "5 minutes",
     dims: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Streaming twin of sources/rollup.build_hist_rollup (and, with
-    ``dims``, build_tagged_hist_rollup): per-(window, v100) exact value
+    """Streaming twin of the batch histogram ladder (and, with
+    ``dims``, the tagged histogram): per-(window, v100) exact value
     counts. State per open window is bounded by the value DOMAIN seen
     in that window, not its point count — the same compression argument
     as the batch histogram ladder."""
-    v100 = F.round(F.col("value") * 100).cast("long").alias("v100")
+    from dqe_spark.sources.rollup import v100
+
     return (
         metrics.withWatermark("ts", watermark)
-        .select("bucket", "metric", *dims, "ts", v100)
+        .select("bucket", "metric", *dims, "ts", v100())
         .groupBy("bucket", "metric", *dims, "v100", F.window("ts", res).alias("w"))
         .agg(F.count("*").alias("cnt"))
         .select(

@@ -131,7 +131,7 @@ def test_cms_increment_merge_equals_rebuild(spark, tmp_path):
     R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
     import shutil
 
-    store = R._cms_dir(SF_SMOKE, 3_600_000)
+    store = R.ladder_dir("cms", SF_SMOKE, 3_600_000)
     full = {
         (r["event_type"], r["wts"], r["d"], r["pos"]): r["c"]
         for r in spark.read.parquet(str(store)).collect()
@@ -173,12 +173,12 @@ def test_expire_cms_and_pdistinct_ladders(spark):
     from dqe_spark.sources import rollup as R
 
     res = 3_600_000
-    for ladder, build, dir_of in (
-        ("cms", R.build_cms_rollup, R._cms_dir),
-        ("pdistinct", R.build_portable_distinct_rollup, R._pdistinct_dir),
+    for ladder, build in (
+        ("cms", R.build_cms_rollup),
+        ("pdistinct", R.build_portable_distinct_rollup),
     ):
         build(spark, SF_SMOKE, res, force=True)
-        out = dir_of(SF_SMOKE, res)
+        out = R.ladder_dir(ladder, SF_SMOKE, res)
         before = spark.read.parquet(str(out))
         lo, hi = before.agg(F.min("wts"), F.max("wts")).first()
         cutoff = (lo + hi) // 2 + 17
@@ -251,7 +251,7 @@ def test_cms_oracle_replays_at_stored_width(spark, duck):
     from dqe_spark.sources import rollup as R
 
     W2 = 2 * SK.CMS_W
-    store = R._cms_dir(SF_SMOKE, 3_600_000)
+    store = R.ladder_dir("cms", SF_SMOKE, 3_600_000)
     had = (store / "_SUCCESS").exists()
     try:
         R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True, w=W2)
@@ -307,7 +307,7 @@ def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
     from dqe_spark.sources import rollup as R
     from dqe_spark.sources.metric_store import load_events
 
-    store = R._cms_dir(SF_SMOKE, 3_600_000)
+    store = R.ladder_dir("cms", SF_SMOKE, 3_600_000)
     had = (store / "_SUCCESS").exists()
     try:
         # a deliberately narrow store + a floor/budget shrunk to the
@@ -342,7 +342,7 @@ def test_expire_cms_preserves_width_marker(spark):
 
     W2 = 2 * SK.CMS_W
     res = 3_600_000
-    store = R._cms_dir(SF_SMOKE, res)
+    store = R.ladder_dir("cms", SF_SMOKE, res)
     had = (store / "_SUCCESS").exists()
     try:
         R.build_cms_rollup(spark, SF_SMOKE, res, force=True, w=W2)
@@ -377,7 +377,7 @@ def test_build_cms_width_marker_rides_the_atomic_rename(spark, monkeypatch):
     from dqe_spark.sources import rollup as R
 
     W2 = 2 * SK.CMS_W
-    store = R._cms_dir(SF_SMOKE, 3_600_000)
+    store = R.ladder_dir("cms", SF_SMOKE, 3_600_000)
     had = (store / "_SUCCESS").exists()
     seen = {}
     real = _os.rename
@@ -418,7 +418,7 @@ def test_cms_oracle_width_gate_is_loud(spark):
     from dqe_spark.sources import rollup as R
 
     R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
-    marker = R._cms_dir(SF_SMOKE, 3_600_000) / "_WIDTH"
+    marker = R.ladder_dir("cms", SF_SMOKE, 3_600_000) / "_WIDTH"
     original = marker.read_text()
     try:
         marker.write_text(str(2 * SK.CMS_W))

@@ -1,4 +1,4 @@
-"""End-to-end DQL: query strings → engine.run → values cross-checked
+"""End-to-end DQL: query strings → engine.plan → values cross-checked
 against the independently oracle-verified operator-API results."""
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ def _rows(res):
 
 
 def test_avg_window(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1m) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -35,7 +35,7 @@ def test_avg_window(spark):
 
 
 def test_glob_and_naming(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         f"SELECT avg('events'.* BUCKET 'events', 1m) AS $2 BETWEEN {JAN1} AND {FEB1}",
         SF_SMOKE,
@@ -45,7 +45,7 @@ def test_glob_and_naming(spark):
 
 
 def test_lookup_where_and_groupby(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT 'events'.'click' FROM 'events' WHERE 'host' = 'h1' "
         f"AND 'dc' != 'west' BETWEEN {JAN1} AND {FEB1}",
@@ -56,7 +56,7 @@ def test_lookup_where_and_groupby(spark):
 
     assert n == lookup_where_tags(spark, SF_SMOKE).count()
 
-    (g,) = engine.run(
+    (g,) = engine.plan(
         spark,
         "SELECT 'events'.'click' FROM 'events' GROUP BY $'host' USING avg "
         f"AS $'host' BETWEEN {JAN1} AND {FEB1}",
@@ -67,7 +67,7 @@ def test_lookup_where_and_groupby(spark):
 
 
 def test_infix_combinator(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1m) / "
         "avg('events'.'view' BUCKET 'events', 1m) "
@@ -83,7 +83,7 @@ def test_infix_combinator(spark):
 
 
 def test_chain_divide(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT divide(sum('events'.'click' BUCKET 'events', 1m), 2) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -101,7 +101,7 @@ def test_chain_divide(spark):
 def test_shift(spark):
     JAN10 = JAN1 + 9 * 86_400_000
     JAN15 = JAN1 + 14 * 86_400_000
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events' SHIFT BY 1d, 1h) "
         f"BETWEEN {JAN10} AND {JAN15}",
@@ -117,7 +117,7 @@ def test_shift(spark):
 
 
 def test_top2(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         f"SELECT avg('events'.* BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1} "
         "TOP 2 BY avg",
@@ -131,7 +131,7 @@ def test_top2(spark):
 
 
 def test_events_filter(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT EVENTS FROM 'events' WHERE 'event_type' == 'error' "
         f"AND 'k' > 50 AND NOT 'value' < 1 BETWEEN {JAN1} AND {FEB1}",
@@ -144,7 +144,7 @@ def test_events_filter(spark):
 
 
 def test_histogram_percentile(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT percentile(histogram('events'.'click' BUCKET 'events', 1000000, 3, 5m), 0.99) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -161,12 +161,12 @@ def test_histogram_percentile(spark):
 
 def test_percentile_int_quirk(spark):
     """Integer percentile arg is halved (src/dqe_percentile_aggr.erl:15-16)."""
-    (a,) = engine.run(
+    (a,) = engine.plan(
         spark,
         f"SELECT percentile('events'.'click' BUCKET 'events', 1, 5m) BETWEEN {JAN1} AND {FEB1}",
         SF_SMOKE,
     )
-    (b,) = engine.run(
+    (b,) = engine.plan(
         spark,
         f"SELECT percentile('events'.'click' BUCKET 'events', 0.5, 5m) BETWEEN {JAN1} AND {FEB1}",
         SF_SMOKE,
@@ -177,7 +177,7 @@ def test_percentile_int_quirk(spark):
 
 
 def test_alias_and_multi(spark):
-    res = engine.run(
+    res = engine.plan(
         spark,
         "SELECT avg(q, 1m), sum(q, 1m) ALIAS 'events'.'click' BUCKET 'events' AS q "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -191,7 +191,7 @@ def test_resolution_conflict(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="multiple"):
-        engine.run(
+        engine.plan(
             spark,
             "SELECT avg('events'.'click' BUCKET 'events', 1500ms) "
             f"BETWEEN {JAN1} AND {FEB1} ",
@@ -201,7 +201,7 @@ def test_resolution_conflict(spark):
 
 def test_last_now(spark):
     # LAST with injected clock: deterministic
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) LAST 1d",
         SF_SMOKE,
@@ -293,7 +293,7 @@ def test_histogram_sig_figs_validation(spark):
     from tests.conftest import SF_SMOKE
 
     with pytest.raises(PlanError, match="1..5"):
-        engine.run(
+        engine.plan(
             spark,
             "SELECT mean(histogram('events'.'click' BUCKET 'events', 1000, 9, 5m)) "
             "LAST 30m",
@@ -318,7 +318,7 @@ def test_tag_where_pushes_to_scan(spark):
     store.ingest(spark, SF_SMOKE)
 
     JAN1, FEB1 = 1704067200000, 1706745600000
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT 'events'.'click' FROM 'events' WHERE 'host' = 'h1' "
         f"AND 'dc' != 'west' BETWEEN {JAN1} AND {FEB1}",
@@ -365,7 +365,7 @@ def test_group_by_product_half_boundary_rounding(spark, duck):
 def test_zscore_matches_operator_twin(spark):
     """zscore() in the language == rolling_zscore over the same
     windowed frame, row for row (including NULL warmup rows)."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT zscore(avg('events'.'click' BUCKET 'events', 1m), 12) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -391,7 +391,7 @@ def test_zscore_matches_operator_twin(spark):
 def test_alert_above_matches_operator_twin(spark):
     """alert_above() == threshold_alerts with for_windows = dur/res;
     a duration that does not divide the resolution is a plan error."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT alert_above(avg('events'.* BUCKET 'events', 5m), 30, 10m) "
         f"BETWEEN {JAN1} AND {FEB1}",
@@ -414,7 +414,7 @@ def test_alert_above_matches_operator_twin(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="multiple"):
-        engine.run(
+        engine.plan(
             spark,
             "SELECT alert_above(avg('events'.'click' BUCKET 'events', 5m), 10, 7m) "
             f"BETWEEN {JAN1} AND {FEB1}",
@@ -425,7 +425,7 @@ def test_alert_above_matches_operator_twin(spark):
 def test_bm25_in_language(spark):
     """bm25() == sources/text_index.bm25_search with the query string
     tokenized by the index rule; an unindexable query is a plan error."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark, "SELECT bm25('dup hash join', 5) LAST 1d", SF_SMOKE
     )
     assert res.kind == "events"
@@ -440,14 +440,14 @@ def test_bm25_in_language(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="no indexable terms"):
-        engine.run(spark, "SELECT bm25('!!!', 5) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT bm25('!!!', 5) LAST 1d", SF_SMOKE)
 
 
 def test_zscore_composes_with_group_by(spark):
     """zscore() keys on whatever series identity the frame carries —
     here the GROUP BY tag columns — so anomaly scoring composes with
     tag grouping like any other windowed function."""
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT zscore(avg('events'.'click' FROM 'events' GROUP BY $'host' "
         f"USING avg, 1m), 12) BETWEEN {JAN1} AND {FEB1}",
@@ -469,7 +469,7 @@ def test_neardup_in_language(spark):
     pins the CANDIDATE BUDGET itself: the language path generates
     exactly _srp_candidates(auto_planes)'s pair set. A threshold
     outside 0..1 is a plan error."""
-    (res,) = engine.run(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
+    (res,) = engine.plan(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
     assert res.kind == "events"
     import dqe_spark.operators.similarity as S
 
@@ -508,14 +508,14 @@ def test_neardup_in_language(spark):
 
     S.neardup_srp_pairs = spy
     try:
-        engine.run(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
     finally:
         S.neardup_srp_pairs = real
     assert seen == {"planes_matrix": None, "bands": 8}
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="0..1"):
-        engine.run(spark, "SELECT neardup(1.5) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT neardup(1.5) LAST 1d", SF_SMOKE)
 
 
 def test_dedup_in_language(spark):
@@ -523,7 +523,7 @@ def test_dedup_in_language(spark):
     dedup('semantic') == SemDeDup survivors over the auto-width SRP
     pairs (planes_matrix=None);
     an unknown mode is a plan error."""
-    (res,) = engine.run(spark, "SELECT dedup('exact') LAST 1d", SF_SMOKE)
+    (res,) = engine.plan(spark, "SELECT dedup('exact') LAST 1d", SF_SMOKE)
     from dqe_spark.operators.dedup import dedup_exact
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -534,7 +534,7 @@ def test_dedup_in_language(spark):
     )
     assert got == expect
 
-    (sem,) = engine.run(spark, "SELECT dedup('semantic', 0.2) LAST 1d", SF_SMOKE)
+    (sem,) = engine.plan(spark, "SELECT dedup('semantic', 0.2) LAST 1d", SF_SMOKE)
     from dqe_spark.operators.similarity import (
         neardup_srp_pairs,
         semantic_survivors,
@@ -550,7 +550,7 @@ def test_dedup_in_language(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="expected 'exact', 'semantic'"):
-        engine.run(spark, "SELECT dedup('fuzzy') LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT dedup('fuzzy') LAST 1d", SF_SMOKE)
 
 
 def test_substring_dedup_and_surprisal_in_language(spark):
@@ -561,7 +561,7 @@ def test_substring_dedup_and_surprisal_in_language(spark):
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
 
-    (res,) = engine.run(spark, "SELECT dedup('substring') LAST 1d", SF_SMOKE)
+    (res,) = engine.plan(spark, "SELECT dedup('substring') LAST 1d", SF_SMOKE)
     want = sorted(
         tuple(r) for r in strip_duplicate_substrings(docs, k=5).collect()
     )
@@ -573,7 +573,7 @@ def test_substring_dedup_and_surprisal_in_language(spark):
     )
     assert got == want
 
-    (sup,) = engine.run(spark, "SELECT surprisal() LAST 1d", SF_SMOKE)
+    (sup,) = engine.plan(spark, "SELECT surprisal() LAST 1d", SF_SMOKE)
     want_s = sorted(tuple(r) for r in unigram_surprisal(docs).collect())
     got_s = sorted(
         tuple(r)
@@ -586,9 +586,9 @@ def test_substring_dedup_and_surprisal_in_language(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="substring"):
-        engine.run(spark, "SELECT dedup('substring', 1) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT dedup('substring', 1) LAST 1d", SF_SMOKE)
     with pytest.raises(PlanError, match="surprisal"):
-        engine.run(spark, "SELECT surprisal(3) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT surprisal(3) LAST 1d", SF_SMOKE)
 
 
 def test_knn_ann_in_language(spark):
@@ -604,7 +604,7 @@ def test_knn_ann_in_language(spark):
     query = emb.where(F.col("vec_id") == 5)
     corpus = emb.where(F.col("vec_id") != 5)
 
-    (res,) = engine.run(spark, "SELECT knn(5, 10) LAST 1d", SF_SMOKE)
+    (res,) = engine.plan(spark, "SELECT knn(5, 10) LAST 1d", SF_SMOKE)
     got = [(r["vec_id"], r["cos"]) for r in res.df.collect()]
     want = [
         (r["vec_id"], r["cos"])
@@ -612,7 +612,7 @@ def test_knn_ann_in_language(spark):
     ]
     assert got == want and len(got) == 10
 
-    (res,) = engine.run(spark, "SELECT ann(5, 10) LAST 1d", SF_SMOKE)
+    (res,) = engine.plan(spark, "SELECT ann(5, 10) LAST 1d", SF_SMOKE)
     got = [(r["vec_id"], r["cos"]) for r in res.df.collect()]
     want = [
         (r["vec_id"], r["cos"])
@@ -632,11 +632,11 @@ def test_knn_ann_in_language(spark):
     from dqe_spark.dql.compiler import PlanError
 
     with pytest.raises(PlanError, match="knn"):
-        engine.run(spark, "SELECT knn(5) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT knn(5) LAST 1d", SF_SMOKE)
     with pytest.raises(PlanError, match="positive"):
-        engine.run(spark, "SELECT ann(5, 0) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT ann(5, 0) LAST 1d", SF_SMOKE)
     with pytest.raises(PlanError, match="no vector"):
-        engine.run(spark, "SELECT knn(999999, 5) LAST 1d", SF_SMOKE)
+        engine.plan(spark, "SELECT knn(999999, 5) LAST 1d", SF_SMOKE)
 
 
 def test_neardup_sizing_pass_is_cached_per_session(spark):
@@ -650,7 +650,7 @@ def test_neardup_sizing_pass_is_cached_per_session(spark):
 
     S._SIZING_CACHE.clear()
     key = (SF_SMOKE, "embeddings")
-    (res1,) = engine.run(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
+    (res1,) = engine.plan(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
     assert key in S._SIZING_CACHE
     n_true, dims_true = S._SIZING_CACHE[key]
     assert n_true > 0 and dims_true > 0
@@ -660,13 +660,13 @@ def test_neardup_sizing_pass_is_cached_per_session(spark):
     S._SIZING_CACHE[key] = (n_true, dims_true)
     sentinel = (n_true * 1000, dims_true)
     S._SIZING_CACHE[key] = sentinel
-    (res2,) = engine.run(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
+    (res2,) = engine.plan(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
     assert S._SIZING_CACHE[key] == sentinel  # memo read, not recomputed
 
     # restore and confirm the cached path returns the same rows as the
     # first (true-width) run
     S._SIZING_CACHE[key] = (n_true, dims_true)
-    (res3,) = engine.run(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
+    (res3,) = engine.plan(spark, "SELECT neardup(0.2) LAST 1d", SF_SMOKE)
     a = sorted(map(tuple, res1.df.collect()))
     c = sorted(map(tuple, res3.df.collect()))
     assert a == c
@@ -682,7 +682,7 @@ def test_dql_dsir_errors_and_shape(spark):
     from dqe_spark.dql.compiler import PlanError
     from tests.conftest import SF_SMOKE
 
-    out = engine.run(
+    out = engine.plan(
         spark, "SELECT dsir('en', 5) LAST 1d", sf_dir=SF_SMOKE
     )[0].df
     rows = out.collect()
@@ -699,7 +699,7 @@ def test_dql_dsir_errors_and_shape(spark):
         "SELECT dsir('en', 1, 2) LAST 1d",
     ):
         with pytest.raises(PlanError):
-            engine.run(spark, bad, sf_dir=SF_SMOKE)
+            engine.plan(spark, bad, sf_dir=SF_SMOKE)
 
 
 def test_dql_retention_errors_and_shape(spark):
@@ -712,7 +712,7 @@ def test_dql_retention_errors_and_shape(spark):
     from dqe_spark.dql.compiler import PlanError
     from tests.conftest import SF_SMOKE
 
-    out = engine.run(
+    out = engine.plan(
         spark, "SELECT retention('click') LAST 1d", sf_dir=SF_SMOKE
     )[0].df
     rows = out.collect()
@@ -722,7 +722,7 @@ def test_dql_retention_errors_and_shape(spark):
     )
     assert all(0 <= r.retention_bp <= 10000 or r.returning_users == 0
                for r in rows)
-    every = engine.run(
+    every = engine.plan(
         spark, "SELECT retention() LAST 1d", sf_dir=SF_SMOKE
     )[0].df
     assert every.select("event_type").distinct().count() > 1
@@ -731,7 +731,7 @@ def test_dql_retention_errors_and_shape(spark):
         "SELECT retention('click', 'view') LAST 1d",
     ):
         with pytest.raises(PlanError):
-            engine.run(spark, bad, sf_dir=SF_SMOKE)
+            engine.plan(spark, bad, sf_dir=SF_SMOKE)
 
 
 def test_dql_retention_offset_arg(spark):
@@ -744,7 +744,7 @@ def test_dql_retention_offset_arg(spark):
     from tests.conftest import SF_SMOKE
 
     DAY = 86_400_000
-    out = engine.run(
+    out = engine.plan(
         spark, "SELECT retention('click', 7) LAST 1d", sf_dir=SF_SMOKE
     )[0].df
     rows = out.collect()
@@ -755,4 +755,4 @@ def test_dql_retention_offset_arg(spark):
         "SELECT retention('click', 1s) LAST 1d",
     ):
         with pytest.raises(PlanError):
-            engine.run(spark, bad, sf_dir=SF_SMOKE)
+            engine.plan(spark, bad, sf_dir=SF_SMOKE)

@@ -15,7 +15,7 @@ FEB1 = 1706745600000
 
 def _err(spark, dql):
     with pytest.raises(PlanError) as ei:
-        engine.run(spark, dql, SF_SMOKE)
+        engine.plan(spark, dql, SF_SMOKE)
     return engine.error_string(ei.value)
 
 
@@ -94,7 +94,7 @@ def test_percentile_out_of_range(spark):
     # int 90 → 45.0 after the reference's halving quirk: plan-time error,
     # not a runtime Spark failure
     with pytest.raises(PlanError, match="out of range"):
-        engine.run(
+        engine.plan(
             spark,
             f"SELECT percentile('events'.'click' BUCKET 'events', 90, 1h) "
             f"BETWEEN {JAN1} AND {FEB1}",
@@ -105,7 +105,7 @@ def test_percentile_out_of_range(spark):
 def test_combinator_rejects_consts_and_multiseries(spark):
     # two series + a window constant: no such overload
     with pytest.raises(PlanError, match="function not found"):
-        engine.run(
+        engine.plan(
             spark,
             "SELECT avg('events'.'click' BUCKET 'events', "
             f"'events'.'view' BUCKET 'events', 5m) BETWEEN {JAN1} AND {FEB1}",
@@ -113,7 +113,7 @@ def test_combinator_rejects_consts_and_multiseries(spark):
         )
     # ordered fold over a glob (multi-series) input: plan-time rejection
     with pytest.raises(PlanError, match="single-series"):
-        engine.run(
+        engine.plan(
             spark,
             "SELECT avg('events'.* BUCKET 'events', 1m) / "
             f"avg('events'.'click' BUCKET 'events', 1m) BETWEEN {JAN1} AND {FEB1}",
@@ -124,14 +124,14 @@ def test_combinator_rejects_consts_and_multiseries(spark):
 def test_combinator_confidence_is_mean(spark):
     from pyspark.sql import functions as F
 
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) + "
         f"avg('events'.'view' BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}",
         SF_SMOKE,
     )
     # confidence() over the combined frame sees real values, not 1.0
-    (res2,) = engine.run(
+    (res2,) = engine.plan(
         spark,
         "SELECT confidence(avg('events'.'click' BUCKET 'events', 1h) + "
         f"avg('events'.'view' BUCKET 'events', 1h)) BETWEEN {JAN1} AND {FEB1}",

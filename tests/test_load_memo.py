@@ -19,6 +19,7 @@ from dqe_spark.sources import store as ST
 from tests.conftest import SF_SMOKE
 
 MAX_1M = "SELECT max('events'.'click' BUCKET 'events', 1m) LAST 2d"
+MAX_1H = "SELECT max('events'.'click' BUCKET 'events', 1h) LAST 2d"
 P50_1M = "SELECT percentile('events'.'click' BUCKET 'events', 0.5, 1m) LAST 2d"
 
 
@@ -47,16 +48,20 @@ def test_serve_after_merge_reads_merged_rollups(spark, sf):
     """Serve, merge points in a new window into the 1m scalar and
     histogram rollups, serve again: the second answers carry the new
     window (a memo that outlived the merge raised FILE_NOT_EXIST or
-    answered from the old files)."""
+    answered from the old files). The 1h panel reads the 1h level,
+    which the 1m merge keeps in step."""
     from dqe_spark.sources.metric_store import load_metrics
 
     m = load_metrics(spark, sf)
     t_max = m.agg(F.max("ts_ms")).first()[0]
-    w = t_max - t_max % 60_000 + 120_000  # a window no point falls in
-    now = w + 60_000
+    # an hour-aligned window no point falls in
+    w = t_max - t_max % 3_600_000 + 2 * 3_600_000
+    now, now_1h = w + 60_000, w + 3_600_000
     before = _served(spark, MAX_1M, sf, now)
     assert before and w not in before
     assert w not in _served(spark, P50_1M, sf, now)
+    before_1h = _served(spark, MAX_1H, sf, now_1h)
+    assert before_1h and w not in before_1h
 
     vals = spark.createDataFrame(
         [(w, 1.25), (w + 1_000, 2.5), (w + 2_000, 7.75)], "ts_ms long, value double"
@@ -75,6 +80,9 @@ def test_serve_after_merge_reads_merged_rollups(spark, sf):
     assert after[w] == 7.75
     assert {k: v for k, v in after.items() if k != w} == before
     assert _served(spark, P50_1M, sf, now)[w] == 2.5
+    after_1h = _served(spark, MAX_1H, sf, now_1h)
+    assert after_1h[w] == 7.75
+    assert {k: v for k, v in after_1h.items() if k != w} == before_1h
 
 
 def test_plans_reuse_loaded_rollups_until_a_write(spark, sf):
@@ -84,7 +92,7 @@ def test_plans_reuse_loaded_rollups_until_a_write(spark, sf):
     loaded = R.load_rollup(spark, sf, 60_000)
     engine.plan(spark, MAX_1M, sf, use_rollups=True)
     assert R.load_rollup(spark, sf, 60_000) is loaded
-    assert engine._rollup_stores(spark, sf)[0][60_000] is loaded
+    assert engine._rollup_stores(spark, sf)["rollup"][60_000] is loaded
     assert engine._STORE_MEMO is ST._LOAD_MEMO
 
     R.build_rollup(spark, sf, 60_000, force=True)

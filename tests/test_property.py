@@ -118,9 +118,10 @@ def test_everything_plans(spark):
               suppress_health_check=[HC.function_scoped_fixture])
     def inner(src):
         from dqe_spark.dql.compiler import PlanError
+        from tests.conftest import SF_SMOKE
 
         try:
-            (res,) = engine.run(spark, src, "/root/testdata/sf0.001")
+            (res,) = engine.plan(spark, src, SF_SMOKE)
             _ = res.df.schema  # forces analysis
         except PlanError as e:
             # only the window/resolution contract may reject
@@ -334,7 +335,7 @@ def test_everything_plans_ext(spark):
         from dqe_spark.dql.compiler import PlanError
 
         try:
-            (res,) = engine.run(spark, src, SF_SMOKE)
+            (res,) = engine.plan(spark, src, SF_SMOKE)
             _ = res.df.schema  # forces analysis
         except PlanError as e:
             # only zscore's window/resolution contract may reject

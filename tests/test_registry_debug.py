@@ -20,12 +20,12 @@ def test_register_aggregate(spark):
         "p95", lambda v: F.round(F.percentile(F.col(v), F.lit(0.95)), 4)
     )
     try:
-        (res,) = engine.run(
+        (res,) = engine.plan(
             spark,
             f"SELECT p95('events'.'click' BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}",
             SF_SMOKE,
         )
-        (ref,) = engine.run(
+        (ref,) = engine.plan(
             spark,
             "SELECT percentile('events'.'click' BUCKET 'events', 0.95, 1h) "
             f"BETWEEN {JAN1} AND {FEB1}",
@@ -91,7 +91,7 @@ def test_register_transform(spark):
         "clip100", lambda v: F.least(v, F.lit(100.0))
     )
     try:
-        (res,) = engine.run(
+        (res,) = engine.plan(
             spark,
             f"SELECT clip100('events'.'click' BUCKET 'events') BETWEEN {JAN1} AND {FEB1}",
             SF_SMOKE,
@@ -103,7 +103,7 @@ def test_register_transform(spark):
 
 
 def test_metadata_column(spark):
-    (res,) = engine.run(
+    (res,) = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) AS lbl "
         "METADATA {'unit': 'reqs', 'hostvar': $1} "

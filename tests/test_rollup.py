@@ -184,7 +184,7 @@ def test_distinct_increment_matches_full_rebuild(spark):
 
     first = ev.where(F.col("ts_ms") < cut)
     second = ev.where(F.col("ts_ms") >= cut)
-    out = R._distinct_dir(SF_SMOKE, 3_600_000)
+    out = R.ladder_dir("distinct", SF_SMOKE, 3_600_000)
     shutil.rmtree(out)
     R._atomic_write(
         first.select(
@@ -293,7 +293,7 @@ def test_portable_distinct_increment_matches_full_rebuild(spark):
 
     first = ev.where(F.col("ts_ms") < cut)
     second = ev.where(F.col("ts_ms") >= cut)
-    out = R._pdistinct_dir(SF_SMOKE, 3_600_000)
+    out = R.ladder_dir("pdistinct", SF_SMOKE, 3_600_000)
     shutil.rmtree(out)
     R._atomic_write(
         SK.hll_pack(
@@ -431,7 +431,10 @@ def test_partial_variance_wide_domain(spark):
 def test_ladder_increments_equal_full_rebuild(spark):
     """Every remaining ladder level (hist, tagged, tagged-hist) merges
     increments to the exact same partials as a one-shot full build —
-    same halves protocol as the plain-rollup increment test."""
+    same halves protocol as the plain-rollup increment test. The 1h
+    scalar and tagged levels are cascaded from the first-half 1m level
+    before the merge, and after the 1m merge must equal a cascade of
+    the full 1m build."""
     from dqe_spark.sources import rollup as R
     from dqe_spark.sources.metric_store import load_metrics
 
@@ -440,10 +443,11 @@ def test_ladder_increments_equal_full_rebuild(spark):
     m = load_metrics(spark, sf)
     cut = int(m.agg(F.expr("percentile(ts_ms, 0.5)")).collect()[0][0])
     first, second = m.where(F.col("ts_ms") < cut), m.where(F.col("ts_ms") >= cut)
+    scalar = ("cnt", "sum", "sum_sq", "min", "max", "sum_conf")
 
     cases = [
         (
-            R.build_hist_rollup, R._hist_dir, R.merge_hist_increment,
+            "hist", res, R.build_hist_rollup, None, R.merge_hist_increment,
             ("bucket", "metric", "wts", "v100", "cnt"),
             lambda pts: R._atomic_write(
                 pts.select(
@@ -453,21 +457,20 @@ def test_ladder_increments_equal_full_rebuild(spark):
                 )
                 .groupBy("bucket", "metric", "wts", "v100")
                 .agg(F.count("*").alias("cnt")),
-                R._hist_dir(sf, res), "_tmp_inc_seed_h",
+                R.ladder_dir("hist", sf, res), "_tmp_inc_seed_h",
                 sort_cols=("wts", "v100"),
             ),
         ),
         (
-            R.build_tagged_rollup, R._tagged_dir, R.merge_tagged_increment,
-            ("bucket", "metric", *R.TAGGED_DIMS, "wts", "cnt", "sum",
-             "sum_sq", "min", "max", "sum_conf"),
+            "tagged", res, R.build_tagged_rollup, None, R.merge_tagged_increment,
+            ("bucket", "metric", *R.TAGGED_DIMS, "wts", *scalar),
             lambda pts: R._atomic_write(
                 R.point_partials(pts, res, dims=R.TAGGED_DIMS),
-                R._tagged_dir(sf, res), "_tmp_inc_seed_t",
+                R.ladder_dir("tagged", sf, res), "_tmp_inc_seed_t",
             ),
         ),
         (
-            R.build_tagged_hist_rollup, R._tagged_hist_dir,
+            "tagged_hist", res, R.build_tagged_hist_rollup, None,
             R.merge_tagged_hist_increment,
             ("bucket", "metric", *R.TAGGED_DIMS, "wts", "v100", "cnt"),
             lambda pts: R._atomic_write(
@@ -478,25 +481,78 @@ def test_ladder_increments_equal_full_rebuild(spark):
                 )
                 .groupBy("bucket", "metric", *R.TAGGED_DIMS, "wts", "v100")
                 .agg(F.count("*").alias("cnt")),
-                R._tagged_hist_dir(sf, res), "_tmp_inc_seed_th",
+                R.ladder_dir("tagged_hist", sf, res), "_tmp_inc_seed_th",
                 sort_cols=("wts", "v100"),
             ),
         ),
+        (
+            "rollup", 3_600_000, R.build_rollup, R.cascade_rollup,
+            R.merge_rollup_increment,
+            ("bucket", "metric", "wts", *scalar),
+            lambda pts: R._atomic_write(
+                R.point_partials(pts, res), R.ladder_dir("rollup", sf, res),
+                "_tmp_inc_seed_r",
+            ),
+        ),
+        (
+            "tagged", 3_600_000, R.build_tagged_rollup, R.cascade_tagged_rollup,
+            R.merge_tagged_increment,
+            ("bucket", "metric", *R.TAGGED_DIMS, "wts", *scalar),
+            lambda pts: R._atomic_write(
+                R.point_partials(pts, res, dims=R.TAGGED_DIMS),
+                R.ladder_dir("tagged", sf, res), "_tmp_inc_seed_t",
+            ),
+        ),
     ]
-    for build, dir_of, merge, cols, seed in cases:
-        out = build(spark, sf, res, force=True)
-        expected = {
+
+    def rows(kind, level, cols):
+        return {
             tuple(r)
-            for r in spark.read.parquet(str(out)).select(*cols).collect()
+            for r in spark.read.parquet(str(R.ladder_dir(kind, sf, level)))
+            .select(*cols)
+            .collect()
         }
+
+    for kind, level, build, cascade, merge, cols, seed in cases:
+        build(spark, sf, res, force=True)
+        if cascade:
+            cascade(spark, sf, res, level, force=True)
+        expected = rows(kind, level, cols)
         seed(first)
+        if cascade:  # the 1h level as it was before the second half
+            cascade(spark, sf, res, level, force=True)
         merge(spark, second, sf, res)
-        got = {
-            tuple(r)
-            for r in spark.read.parquet(str(out)).select(*cols).collect()
-        }
-        assert got == expected and got, build.__name__
+        got = rows(kind, level, cols)
+        assert got == expected and got, (kind, level)
         build(spark, sf, res, force=True)  # restore for other tests
+        if cascade:
+            cascade(spark, sf, res, level, force=True)
+
+
+def test_missing_coarse_level_is_a_cascade(spark, tmp_path):
+    """A missing 1h scalar level created by loading it has the schema
+    cascade_rollup writes (one schema per level, whichever call made
+    it) and the same rows."""
+    import shutil
+    import uuid
+
+    from dqe_spark.sources import rollup as R
+    from dqe_spark.sources.store import STORE_ROOT
+
+    sf = tmp_path / f"coarse_{uuid.uuid4().hex[:8]}"
+    sf.mkdir()
+    shutil.copy(f"{SF_SMOKE}/events.parquet", sf / "events.parquet")
+    try:
+        loaded = R.load_rollup(spark, str(sf), 3_600_000)
+        got = (loaded.dtypes, {tuple(r) for r in loaded.collect()})
+        R.cascade_rollup(spark, str(sf), 60_000, 3_600_000, force=True)
+        cascaded = spark.read.parquet(
+            str(R.ladder_dir("rollup", str(sf), 3_600_000))
+        )
+        assert got[0] == cascaded.dtypes
+        assert got[1] == {tuple(r) for r in cascaded.collect()} and got[1]
+    finally:
+        shutil.rmtree(STORE_ROOT / sf.name, ignore_errors=True)
 
 
 def test_expire_rollup_before_drops_old_windows(spark):
@@ -506,12 +562,12 @@ def test_expire_rollup_before_drops_old_windows(spark):
     from dqe_spark.sources import rollup as R
 
     res = 60_000
-    for ladder, build, dir_of in (
-        ("rollup", R.build_rollup, R._rollup_dir),
-        ("hist", R.build_hist_rollup, R._hist_dir),
+    for ladder, build in (
+        ("rollup", R.build_rollup),
+        ("hist", R.build_hist_rollup),
     ):
         build(spark, SF_SMOKE, res, force=True)
-        out = dir_of(SF_SMOKE, res)
+        out = R.ladder_dir(ladder, SF_SMOKE, res)
         before = spark.read.parquet(str(out))
         lo, hi = before.agg(F.min("wts"), F.max("wts")).first()
         cutoff = (lo + hi) // 2 + 17  # deliberately unaligned

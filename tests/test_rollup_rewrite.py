@@ -20,7 +20,7 @@ def _plan_of(df) -> str:
 
 
 def _runs(spark, dql, **kw):
-    (res,) = engine.run(spark, dql, SF_SMOKE, **kw)
+    (res,) = engine.plan(spark, dql, SF_SMOKE, **kw)
     return res.df
 
 

@@ -73,7 +73,7 @@ def test_export_named_results(spark, tmp_path):
     from dqe_spark import engine, sinks
 
     JAN1, FEB1 = 1704067200000, 1706745600000
-    res = engine.run(
+    res = engine.plan(
         spark,
         "SELECT avg('events'.'click' BUCKET 'events', 1h) AS clicks "
         f"BETWEEN {JAN1} AND {FEB1}",

@@ -119,7 +119,7 @@ def test_date_layout_parity_and_pruning(spark):
         )
         assert "PartitionFilters" in plan and "dt" in plan and "2024-01-0" in plan
 
-        (want,) = engine.run(
+        (want,) = engine.plan(
             spark,
             "SELECT avg('events'.'click' BUCKET 'events', 1m) "
             f"BETWEEN {JAN1} AND {JAN3}",
@@ -296,7 +296,7 @@ def test_events_store_parity_and_pruning(spark):
         b = sorted(map(tuple, view.collect()))
         assert a == b
 
-        (res,) = engine.run(
+        (res,) = engine.plan(
             spark,
             "SELECT EVENTS FROM 'events' WHERE 'event_type' == 'error' "
             "BETWEEN 1704067200000 AND 1704153600000",

@@ -363,7 +363,7 @@ def test_stream_tagged_and_hist_partials_match_batch(spark):
     from dqe_spark.streaming.ingest import (
         stream_hist_partials,
         stream_metrics,
-        stream_tagged_rollup_partials,
+        stream_rollup_partials,
     )
 
     tmp = Path(tempfile.mkdtemp(prefix="dqe_streamth_"))
@@ -387,8 +387,8 @@ def test_stream_tagged_and_hist_partials_match_batch(spark):
     dims = ("host", "dc", "user")
     cases = [
         (
-            stream_tagged_rollup_partials(
-                stream_metrics(spark, str(landing), with_dims=True)
+            stream_rollup_partials(
+                stream_metrics(spark, str(landing), with_dims=True), dims=dims
             ),
             load_tagged_rollup(spark, SF_SMOKE, 60_000),
             ("metric", *dims, "wts"),
@@ -652,7 +652,7 @@ def test_stream_cms_counters_match_batch_bitwise(spark):
         want = {
             (r["event_type"], r["wts"], r["d"], r["pos"]): r["c"]
             for r in spark.read.parquet(
-                str(R._cms_dir(SF_SMOKE, 3_600_000))
+                str(R.ladder_dir("cms", SF_SMOKE, 3_600_000))
             ).collect()
         }
         assert got and all(got[k] == want[k] for k in got)
@@ -812,7 +812,7 @@ def test_stream_cms_counters_derives_width_from_store(
     W2 = 2 * SK.CMS_W
     from tests.conftest import SF_SMOKE
 
-    had = (R._cms_dir(SF_SMOKE, 3_600_000) / "_SUCCESS").exists()
+    had = (R.ladder_dir("cms", SF_SMOKE, 3_600_000) / "_SUCCESS").exists()
     real_pos = SK.cms_pos_expr
     widths: list[int] = []
 
