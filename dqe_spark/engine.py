@@ -200,7 +200,9 @@ def collect(
 
     trace_id opens a query span (plans/span.py — the reference's
     dqe_span surface, src/dqe.erl:181-230: tag the query text and
-    statement count, log the same preparation/execution milestones);
+    statement count, log the same preparation/execution milestones)
+    and tags it with ``codegen_compiles``, the classes Spark generated
+    for this query's plan and collect (0 when every one was cached);
     None keeps tracing a strict no-op, as in the reference."""
     import time as _time_mod
 
@@ -209,6 +211,7 @@ def collect(
     t0 = _time_mod.monotonic()
     _span.start("query", trace_id)
     _span.tag("query", dql)
+    compiles0 = None if trace_id is None else codegen_compiles(spark)
     try:
         results = plan(spark, dql, sf_dir, now_ms, use_rollups)
         _span.tag("parts", len(results))
@@ -220,7 +223,16 @@ def collect(
             _time_mod,
         )
     finally:
+        if compiles0 is not None:
+            _span.tag("codegen_compiles", codegen_compiles(spark) - compiles0)
         _span.stop()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far
+    (each a miss of its generated-class cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _collect_traced(

@@ -14,6 +14,18 @@ from pyspark.sql import SparkSession
 
 _DEFAULT_SHUFFLE_PARTITIONS = "32"
 
+#: entries of Spark's generated-class cache (one per distinct generated
+#: source). The engine repeats a fixed set of plan shapes, so the cache
+#: must hold its whole working set. Measured with the perfbench
+#: workloads (seed 5, 4 vCPU): one ingest_serve run generates 293
+#: distinct classes, 106 of them at set-up; one landed batch's five
+#: ladder merges use 98; pipeline_suite's 11 rows use 153, plus 23 at
+#: set-up. At Spark's default of 100 the LRU evicts every class before
+#: its next use, so each batch Janino-compiled 134-139 classes again and
+#: HotSpot JIT-compiled them again (4.6-6.7 of the merges' 13-16 CPU-s
+#: per batch). At 2000 a steady batch's merges compile none.
+_CODEGEN_CACHE_ENTRIES = "2000"
+
 
 def get_spark(app_name: str = "dqe-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -28,6 +40,19 @@ def get_spark(app_name: str = "dqe-spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", _DEFAULT_SHUFFLE_PARTITIONS)
+        # a static setting: read once per JVM, when the first plan is
+        # generated, so it is only honoured from the builder
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
+        # The cache is keyed by the generated source, and by default a
+        # whole-stage class is named after its codegen stage number.
+        # AQE numbers the stages it plans after a shuffle in the order
+        # the shuffles finish, so a plan whose shuffles can finish in
+        # either order (a rollup merge, a percentile panel's join of
+        # two aggregates) had two sources for each such class, and a
+        # repeat compiled whichever one was not cached yet. Without the
+        # number, equal stages share one class (the plan's explain
+        # output still shows the number).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Arrow batches for the pandas-UDF paths (multimodal decode,
         # HDR-exact fallbacks) — never row-at-a-time Python.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -546,10 +546,10 @@ def _cms_regrow(merged: DataFrame, markers: dict, out: Path) -> dict | None:
     outgrows the stored width's load budget, the store is LOUDLY
     rebuilt at the wider layout — counters hashed mod W cannot be
     re-hashed to 2W, so unlike gram_store's rebucket this migration
-    goes back to the events source of record (the merge then re-folds
-    the in-hand increment). Per-cell totals come from the d=0 counter
-    row (Σc over one hash row IS the cell's event count — no raw
-    scan)."""
+    goes back to the events source of record, which already holds the
+    increment (merge's contract), so the rebuild is the merged store.
+    Per-cell totals come from the d=0 counter row (Σc over one hash
+    row IS the cell's event count — no raw scan)."""
     from dqe_spark.operators.sketches import auto_cms_width
 
     n_max = (
@@ -565,8 +565,8 @@ def _cms_regrow(merged: DataFrame, markers: dict, out: Path) -> dict | None:
     print(
         f"[rollup] CMS store {out} width {w} under-sized for its "
         f"heaviest cell ({n_max} events): rebuilding at width {want} "
-        "from the events source + this increment (counters cannot "
-        "re-hash across widths)"
+        "from the events source, which holds this increment (counters "
+        "cannot re-hash across widths)"
     )
     return {"w": want}
 
@@ -777,8 +777,17 @@ def merge(
 ) -> Path:
     """Fold newly-landed source rows into one ladder level WITHOUT a
     full rebuild: partials are mergeable by construction, so the update
-    reads and rewrites only the partitions the increment touches — an
-    hourly backfill costs proportional to the new data, not the store.
+    reads and rewrites only the partitions the increment touches. A
+    partition is a whole (bucket, metric) or event_type series across
+    all time, so a merge costs proportional to the history of every
+    series it touches, not to the increment (measured on the perfbench
+    ingest_serve workload, seed 5: 1.03 MB rewritten per 6.5 KB batch,
+    a write amplification of 158, against a 1.12 MB store).
+
+    ``new`` must already be in the source of record: a missing level
+    is built from the source (``new`` then adds nothing), and a level
+    rebuilt at a wider layout (the CMS width migration) is rebuilt from
+    the source too, so ``new`` is not folded in again.
 
     The one touched-partition fold: semijoin the touched keys, union
     the increment's partials, fold, localCheckpoint (so the write does
@@ -806,7 +815,9 @@ def merge(
         wider = lv.regrow(merged, markers, out)
         if wider:
             build(kind, spark, sf_dir, res, force=True, **wider)
-            return merge(kind, spark, new, sf_dir, res)
+            for coarse in _coarser_on_disk(kind, sf_dir, res):
+                cascade(kind, spark, sf_dir, res, coarse, force=True)
+            return out
     overwrite_partitions(merged, out, lv.part, lv.sort)
     for coarse in _coarser_on_disk(kind, sf_dir, res):
         overwrite_partitions(

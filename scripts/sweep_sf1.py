@@ -73,6 +73,7 @@ compute with ~2/3 of the fetch/sort removed.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from pathlib import Path
@@ -316,9 +317,9 @@ def main() -> int:
     import json
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
+    from dqe_spark.session import get_spark
     from tests.oracle_util import compare
 
     args = [a for a in sys.argv[1:]]
@@ -339,28 +340,19 @@ def main() -> int:
         del args[args.index("--out"): args.index("--out") + 2]
     pos = [a for a in args if not a.startswith("--")]
     sf = pos[0] if pos else "/root/repo/_testdata/sf1"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        # one session runs 200+ queries back-to-back; localCheckpoint
-        # blocks from finished queries linger until the ContextCleaner
-        # notices their references died (default periodicGC is 30 min
-        # — longer than the whole sweep), which OOM'd a 24g heap at
-        # sf1 mid-run. A short GC interval + more headroom keeps the
-        # long-session block churn bounded.
-        .config("spark.driver.memory", "40g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        # the periodic System.gc() must not be a stop-the-world full
-        # collection on a 40g heap mid-row (see session.py round 11:
-        # in-sweep rows measured up to 3x their fresh-session cost
-        # before this flag; weak refs still clear at the concurrent
-        # cycle's remark so checkpoint blocks keep being freed)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+ExplicitGCInvokesConcurrent",
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's session (get_spark), sized for one session running
+    # 200+ queries back-to-back: 32 cores, a 40g heap and a 2 min
+    # ContextCleaner GC (localCheckpoint blocks of finished queries
+    # linger until the cleaner notices their references died; with
+    # Spark's 30 min default they OOM'd a 24g heap at sf1 mid-run).
+    # Values already set in the environment win.
+    for var, value in (
+        ("SPARK_GRAFT_CPUS", "32"),
+        ("SPARK_GRAFT_DRIVER_MEM", "40g"),
+        ("SPARK_GRAFT_PERIODIC_GC", "2min"),
+    ):
+        os.environ.setdefault(var, value)
+    spark = get_spark("dqe-sweep")
     con = duckdb.connect()
     for n in TABLES:
         con.execute(f"CREATE VIEW {n} AS SELECT * FROM '{sf}/{n}.parquet'")

@@ -297,11 +297,11 @@ def test_cms_oracle_replays_at_stored_width(spark, duck):
 def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
     """An increment that pushes the heaviest cell past the stored
     width's load budget triggers the loud rebuild-at-wider-width path;
-    the migrated store carries the new _WIDTH marker and the increment
-    rows. (Counters hashed mod W cannot re-hash to 2W, so unlike
-    gram_store's rebucket this goes back to the events source + the
-    in-hand increment — the single-increment-in-flight contract the
-    docstring states.)"""
+    the migrated store carries the new _WIDTH marker and equals a fresh
+    build at that width. (Counters hashed mod W cannot re-hash to 2W,
+    so unlike gram_store's rebucket this goes back to the events
+    source, which already holds the increment — merge's contract — so
+    the increment is counted once.)"""
     import shutil
 
     from dqe_spark.sources import rollup as R
@@ -319,9 +319,14 @@ def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
         monkeypatch.setattr(SK, "CMS_W", 1)
         ev = load_events(spark, SF_SMOKE).limit(50)
         R.merge_cms_increment(spark, ev, SF_SMOKE, 3_600_000)
-        assert R.cms_width(SF_SMOKE, 3_600_000) > 2
+        w = R.cms_width(SF_SMOKE, 3_600_000)
+        assert w > 2
         out = capsys.readouterr().out
         assert "under-sized" in out and "rebuilding at width" in out
+        migrated = sorted(map(tuple, spark.read.parquet(str(store)).collect()))
+        R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True, w=w)
+        fresh = sorted(map(tuple, spark.read.parquet(str(store)).collect()))
+        assert migrated == fresh
     finally:
         monkeypatch.undo()
         if had:
